@@ -21,6 +21,10 @@ object PlanDump {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
+      // Mirror Bench's session configs exactly — a dump under different
+      // AQE behavior shows a different plan.
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")

@@ -3207,29 +3207,16 @@ object Analytics {
       .persist()
     val naive = SketchStore.dupClusters(s, dir)
       .join(tombsD, Seq("doc_id"), "left_anti").persist()
-    val g0 = SketchStore.nnGraph(s, dir)
-    val gLiveU0 = g0.join(tombsV.select(col("vec_id").as("u")), Seq("u"), "left_anti")
-      .persist()
-    val liveG0 = gLiveU0
-      .join(tombsV.select(col("vec_id").as("w")), Seq("w"), "left_anti")
-      .persist()
-    // Round 22 (guide §2.6): the four artifact probes are independent;
-    // the fold's propagation loop below is a chain of tiny sequential
-    // driver-paced rounds. Materialize the tombstones first (shared by
-    // every leg), then fill the naive-cluster and graph-edge caches
-    // from concurrent driver threads while the loop runs on this one.
-    QueryDef.overlapLegs(tombsD, tombsV)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val sideF = Future { naive.count(); liveG0.count() }
     val folded = dupClusterPropagate(s,
       livePairs.select(col("doc_a"), col("doc_b"))).persist()
-    Await.result(sideF, Duration.Inf)
     val drift = naive.as("n").join(folded.as("f"), Seq("doc_id"), "full_outer")
       .filter(!(col("n.cluster_id") <=> col("f.cluster_id")))
-    val gLiveU = gLiveU0
-    val liveG = liveG0
+    val g = SketchStore.nnGraph(s, dir)
+    val gLiveU = g.join(tombsV.select(col("vec_id").as("u")), Seq("u"), "left_anti")
+      .persist()
+    val liveG = gLiveU
+      .join(tombsV.select(col("vec_id").as("w")), Seq("w"), "left_anti")
+      .persist()
     val degB = gLiveU.groupBy(col("u")).agg(count(lit(1)).as("db"))
     val degA = liveG.groupBy(col("u")).agg(count(lit(1)).as("da"))
     val degraded = degB.join(degA, Seq("u"), "left")

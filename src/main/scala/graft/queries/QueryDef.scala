@@ -1,8 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import scala.concurrent.{Await, Future}
-import scala.concurrent.duration.Duration
 
 /** One engine capability: a Spark-first implementation plus (where the
   * semantics are ANSI-SQL-expressible) an equivalent DuckDB oracle query
@@ -37,23 +35,4 @@ object QueryDef {
   def noBench(name: String, oracle: String)(
       build: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, Some(oracle), build, bench = false)
-
-  /** Round 22 (guide §2.6): materialize independent PERSISTED legs from
-    * concurrent driver threads. The multi-leg harness entries (serve +
-    * truth + comparison rows) are chains of dozens of tiny AQE stages;
-    * run as one sequential action, each stage pays driver scheduling /
-    * re-optimization / codegen latency while the executors sit
-    * near-idle. Forking one action per leg overlaps those driver-bound
-    * chains; the legs are deterministic and independent, so completion
-    * order cannot change any value. Every leg passed here must already
-    * be `.persist()`ed: the concurrent count() fills its cache, and the
-    * final assembled plan then reads the materialized cache instead of
-    * recomputing — the overlap changes WHEN work runs, never WHAT is
-    * computed. Frames SHARED by two legs must be materialized BEFORE
-    * forking (the r21 q252 rule), or the legs race to fill them. */
-  private[queries] def overlapLegs(legs: DataFrame*): Unit = {
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fs = legs.map(df => Future(df.count()))
-    fs.foreach(Await.result(_, Duration.Inf))
-  }
 }

@@ -483,15 +483,6 @@ object PipelineDedup {
         .withColumn("is_match",
           (expr("(i * 1000000) DIV (na + nb - i)") >= JaccTauMicro).cast(IntegerType))
         .persist()
-      val gradedF = {
-        // Round 22 (guide §2.6): the text-family grading chain (stored
-        // pair artifacts -> pooled exact Jaccard) and the embedding-
-        // family chain below are independent — fill this one's caches
-        // from a driver thread while the embedding chain builds/runs.
-        import scala.concurrent.Future
-        import scala.concurrent.ExecutionContext.Implicits.global
-        Future { graded.count() }
-      }
       val truthTotal = graded.agg(sum(col("is_match")).cast(LongType).as("pool_matches"))
       val textStats = pairs
         .join(graded.select(col("doc_a"), col("doc_b"), col("is_match")),
@@ -519,8 +510,6 @@ object PipelineDedup {
           (round(expr("cosine_similarity(emb_a, emb_b)"), 6) >= KmeansShared.SemCos)
             .cast(IntegerType).as("is_match"))
         .persist() // feeds the 1-row truth total AND the per-config stats
-      QueryDef.overlapLegs(egraded)
-      scala.concurrent.Await.result(gradedF, scala.concurrent.duration.Duration.Inf)
       val etot = egraded.agg(sum(col("is_match")).cast(LongType).as("pool_matches"))
       // merge hint: the pair-keyed stats join is pool × pool — both
       // sides grow with the corpus, so at scale it is a co-partitioned

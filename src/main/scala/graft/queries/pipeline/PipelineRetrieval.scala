@@ -742,12 +742,6 @@ object PipelineRetrieval {
         .select(col("vec_id")).persist()
       def hitsOf(leg: DataFrame, n: String): DataFrame =
         exact.join(leg, "vec_id").agg(count(lit(1)).as(n))
-      // Round 22 (guide §2.6): the four persisted legs are independent
-      // driver-latency-bound chains — materialize them concurrently
-      // (cand first: the ivfpq encode reads its cache), then assemble
-      // the accounting row from the filled caches.
-      QueryDef.overlapLegs(cand, exact, ivf, pq)
-      QueryDef.overlapLegs(ivfpq)
       cand.agg(count(lit(1)).as("n_cand"))
         .crossJoin(hitsOf(ivfpq, "hits_ivfpq"))
         .crossJoin(hitsOf(ivf, "hits_ivf"))
@@ -787,13 +781,8 @@ object PipelineRetrieval {
       val delta = graphMaintainEdges(s, dir, newIds).persist()
       val merged = base.unionByName(delta)
       val comp = s.table(tbl)
-      // (Round 22 note: an overlap-legs choreography here — prefilling
-      // vecs/panel-truth, then the two probes + the diff from concurrent
-      // driver threads — was A/B-measured NEGATIVE twice (3.51 -> 4.2-4.8
-      // s subset): the legs are too small at this SF for the overlap to
-      // buy back the ~6 extra driver actions it costs. Reverted; the
-      // shared panel truth is still persisted via maintainPanelTruth, so
-      // the second probe reuses the first's corpus x panel pass.)
+      // The panel truth is persisted via maintainPanelTruth, so the
+      // second probe reuses the first's corpus x panel pass.
       val probePre = graphMaintainStats(s, dir, merged)
         .select(col("sum_hits").as("probe_pre"))
       val probePost = graphMaintainStats(s, dir, comp)
@@ -907,33 +896,15 @@ object PipelineRetrieval {
     // exchange on the stored side); encode cost lives at build/ingest
     // time, never per query. ----
     QueryDef("q255_ivfpq_stored_serve", ivfpqStoredOracle) { (s, dir) =>
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
       val (cand, top) = ivfpqServeLegs(s, dir, SketchStore.ivfpqCodes(s, dir))
       val exact = Registry.byName("q42_topk_cosine").build(s, dir)
         .orderBy(col("cos_r").desc, col("vec_id")).limit(ANN_RECALL_K)
         .select(col("vec_id")).persist()
-      // Round 22 (guide §2.6): the exact leg is shared with q249's
-      // internal grading — materialize it before forking so the two
-      // chains cannot race its cache fill; then run the (long,
-      // orchestration-bound) q249 comparison row concurrently with the
-      // stored-serve legs. Values are unchanged — only WHEN each leg
-      // materializes moves.
-      QueryDef.overlapLegs(exact)
       // the comparison row: q249's composed/IVF/PQ legs, invoked verbatim
-      val plainF = Future {
-        val p = Registry.byName("q249_ivfpq_ann").build(s, dir)
-          .select(col("hits_ivfpq"), col("hits_ivf"), col("hits_pq")).persist()
-        p.count(); p
-      }
-      val nCand = cand.select(countDistinct(col("vec_id")).as("n_cand")).persist()
-      val hitsStored = exact.join(top, "vec_id")
-        .agg(count(lit(1)).as("hits_stored")).persist()
-      QueryDef.overlapLegs(nCand, hitsStored)
-      val plain = Await.result(plainF, Duration.Inf)
-      nCand
-        .crossJoin(hitsStored)
+      val plain = Registry.byName("q249_ivfpq_ann").build(s, dir)
+        .select(col("hits_ivfpq"), col("hits_ivf"), col("hits_pq"))
+      cand.select(countDistinct(col("vec_id")).as("n_cand"))
+        .crossJoin(exact.join(top, "vec_id").agg(count(lit(1)).as("hits_stored")))
         .crossJoin(plain)
         .select(lit(ANN_RECALL_K.toLong).as("k"),
           lit(NPROBE.toLong).as("nprobe"),
@@ -1079,17 +1050,6 @@ object PipelineRetrieval {
         .persist()
       def hitsOf(picks: DataFrame, n: String): DataFrame =
         truth.join(picks, Seq("u", "vec_id")).agg(count(lit(1)).as(n))
-      // Round 22 (guide §2.6): the sequential final assembly serialized
-      // ~30 tiny driver-bound LUT/encode stages. Prefill the shared
-      // caches in dependency order (qs; then candIds — whose count
-      // fills probes and cand transitively — concurrently with the
-      // independent corpus x panel truth), then materialize the three
-      // grading legs from concurrent driver threads. Values unchanged:
-      // every leg is a pure function of (dir) and already persisted —
-      // only WHEN each cache fills moves.
-      QueryDef.overlapLegs(qs)
-      QueryDef.overlapLegs(candIds, truth)
-      QueryDef.overlapLegs(picksResid, picksRaw, picksIvf)
       qs.agg(count(lit(1)).as("n_queries"))
         .crossJoin(candIds.agg(count(lit(1)).as("n_cand")))
         .crossJoin(hitsOf(picksResid, "hits_resid"))
@@ -1377,12 +1337,10 @@ object PipelineRetrieval {
 
   /** The maintain-grading panel and its per-query exact truth (both
     * persisted, functions of (dir) only) — factored out of
-    * [[graphMaintainStats]] (round 22, guide §2.6) so multi-probe
-    * consumers (q250 grades pre- AND post-fold) can PREFILL the shared
-    * corpus x panel truth concurrently with their other legs instead of
-    * paying it inside the first probe's sequential chain. graft_dot
-    * with the precomputed norms — bit-identical to the cosine kernel
-    * (see scorePairs). */
+    * [[graphMaintainStats]] so multi-probe consumers (q250 grades pre-
+    * AND post-fold) share one corpus x panel pass. graft_dot with the
+    * precomputed norms — bit-identical to the cosine kernel (see
+    * scorePairs). */
   private[queries] def maintainPanelTruth(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     graft.functions.GraftFunctions.register(s)
@@ -1479,15 +1437,26 @@ object PipelineRetrieval {
     * PREFIX of a rounds-(j+1) walk (the beam after round j is the same
     * frame), so one walk to max(roundsWanted) serves every requested
     * depth — the q260 rounds curve pays ONE walk, not one per row.
+    * `beams`: every width walks in the SAME rounds — (width i, query
+    * qid) walks under its own key qid * beams.size + i, and every join,
+    * dedup and window below is per key, so each width's picks are
+    * identical to a walk of that width alone and the q252 width curve
+    * pays one chain of rounds, not one per width.
     * `entries` = the fixed navigating-node panel ([[serveEntryPanel]])
     * — passed in, not derived here, so a standing server (q261) pays
     * its corpus sort-limit ONCE at startup, never per micro-batch.
-    * Returns the top-K picks (qid, vec_id) at each requested depth. */
+    * Returns the top-K picks (qid, vec_id) per (beam, rounds). */
   private[queries] def serveBeamPicksAt(
       vecs: DataFrame, queries: DataFrame, entries: DataFrame,
-      graph: DataFrame, beam: Int,
-      roundsWanted: Seq[Int]): Map[Int, DataFrame] = {
+      graph: DataFrame, beams: Seq[Int],
+      roundsWanted: Seq[Int]): Map[(Int, Int), DataFrame] = {
     graft.functions.GraftFunctions.register(vecs.sparkSession)
+    val nb = beams.size
+    val walkQs = queries
+      .withColumn("bi", explode(array(beams.indices.map(lit(_)): _*)))
+      .withColumn("qid", col("qid") * nb + col("bi")).drop("bi")
+    val width = element_at(array(beams.map(lit(_)): _*),
+      (col("qid") % nb + 1).cast(IntegerType))
     // graft_dot with the precomputed norms (round 22) — bit-identical
     // to the cosine kernel (see scorePairs); the beam re-scores per
     // round, so the saved multiply-adds are paid rounds x beam x
@@ -1495,18 +1464,19 @@ object PipelineRetrieval {
     def score(cand: DataFrame): DataFrame = cand // (qid, w)
       .join(vecs.select(col("vec_id").as("w"), col("v").as("vw"),
         col("nrm").as("nw")), "w")
-      .join(broadcast(queries), "qid")
+      .join(broadcast(walkQs), "qid")
       .select(col("qid"), col("w"),
         round(call_function("graft_dot", col("vw"), col("qv"))
           / (col("nw") * col("qn")), 6).as("cos_r"))
     val wBeam = Window.partitionBy(col("qid")).orderBy(col("cos_r").desc, col("w"))
-    def cut(df: DataFrame, k: Int): DataFrame =
+    def cut(df: DataFrame, k: Column): DataFrame =
       df.withColumn("rn", row_number().over(wBeam)).filter(col("rn") <= k).drop("rn")
-    val seed = score(queries.select(col("qid")).crossJoin(broadcast(entries)))
-    var beamDf = cut(seed, beam).localCheckpoint()
-    val out = Map.newBuilder[Int, DataFrame]
-    def picksOf(b: DataFrame): DataFrame =
-      cut(b, ANN_RECALL_K).select(col("qid"), col("w").as("vec_id"))
+    val seed = score(walkQs.select(col("qid")).crossJoin(broadcast(entries)))
+    var beamDf = cut(seed, width).localCheckpoint()
+    val out = Map.newBuilder[(Int, Int), DataFrame]
+    def picksOf(b: DataFrame, i: Int): DataFrame =
+      cut(b, lit(ANN_RECALL_K)).filter(col("qid") % nb === i)
+        .select(expr(s"qid DIV $nb").as("qid"), col("w").as("vec_id"))
     for (j <- 1 to roundsWanted.max) {
       // Re-scored beam rows produce identical (qid, w, cos_r) rows, so
       // the merge is a (qid, w) dedup; cos_r is a deterministic function
@@ -1519,8 +1489,9 @@ object PipelineRetrieval {
       beamDf = cut(score(expandThrough(beamDf, graph)).union(beamDf)
           .repartition(col("qid"))
           .groupBy(col("qid"), col("w")).agg(max(col("cos_r")).as("cos_r")),
-        beam).localCheckpoint()
-      if (roundsWanted.contains(j)) out += j -> picksOf(beamDf)
+        width).localCheckpoint()
+      if (roundsWanted.contains(j))
+        beams.indices.foreach(i => out += (beams(i), j) -> picksOf(beamDf, i))
     }
     out.result()
   }
@@ -1540,7 +1511,7 @@ object PipelineRetrieval {
   private[queries] def serveBeamPicks(
       vecs: DataFrame, queries: DataFrame, entries: DataFrame,
       graph: DataFrame, beam: Int, rounds: Int): DataFrame =
-    serveBeamPicksAt(vecs, queries, entries, graph, beam, Seq(rounds))(rounds)
+    serveBeamPicksAt(vecs, queries, entries, graph, Seq(beam), Seq(rounds))((beam, rounds))
 
   /** The serve harness's per-query exact-truth leg (qid, vec_id) over
     * the servable candidate frame — the corpus-linear EVAL half, never
@@ -1609,62 +1580,13 @@ object PipelineRetrieval {
     val queries = serveQueryPanel(s, dir).persist()
     val truth = serveTruth(vecs, queries).persist()
     val nq = queries.agg(count(lit(1)).as("n_queries"))
-    // Configs sharing a beam width share ONE walk (a shallower depth is
-    // a prefix of a deeper one — serveBeamPicksAt): the q260 rounds
-    // curve costs one rounds-3 walk, not three walks.
+    // Every config shares ONE walk (widths walk side by side, and a
+    // shallower depth is a prefix of a deeper one — serveBeamPicksAt).
     val entries = serveEntryPanel(vecs)
-    // Round 21 (guide §2.6): distinct beam widths are INDEPENDENT walks
-    // (each is a deterministic function of (vecs, queries, entries,
-    // graph, b)), but each walk is a chain of tiny sequential rounds —
-    // driver-latency-bound, the executors near-idle. Submitting the
-    // walks from concurrent driver threads overlaps those chains; each
-    // walk's internal rounds stay sequential, and the final
-    // orderBy(beam, rounds) fixes output order regardless of completion
-    // order. The shared cached inputs (vecs, queries) are materialized
-    // ONCE up front so concurrent first-use cannot duplicate the fill.
-    val groups = curve.groupBy(_._1).toSeq.sortBy(_._1)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // Round 22 (guide §2.6): the truth leg (one corpus x panel scoring
-    // pass, pure executor compute) is independent of every beam walk (a
-    // chain of tiny sequential rounds, driver-latency-bound with the
-    // executors near-idle) — materialize it concurrently so its compute
-    // fills the walk's idle capacity. Shared cached inputs (vecs,
-    // queries) are materialized BEFORE forking so concurrent first-use
-    // cannot duplicate the fill (the r21 q252 rule).
-    vecs.count()
-    // Round 22 (guide §2.6): a PERSISTED graph frame is a COMPUTED one
-    // (q251's merge-on-read base ∪ maintained-delta chain — capped
-    // probes + hop + scoring); its fill was paid inside round 1 of the
-    // first beam walk, serialized after the seed. Fork it as soon as
-    // its one shared input (vecs) is materialized, overlapping the
-    // delta computation with the queries/truth fills, and have the
-    // walks wait on it so no round races the cache fill. Stored-table
-    // graphs (q245/q252/q253/q259/q260) are not persisted and skip this.
-    val graphF =
-      if (graph.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-        Some(Future(graph.count()))
-      else None
-    queries.count()
-    val truthF = Future(truth.count())
-    graphF.foreach(Await.result(_, Duration.Inf))
-    val rows = if (groups.size <= 1) groups.flatMap { case (b, cfgs) =>
-      val rs = cfgs.map(_._2)
-      val picksAt = serveBeamPicksAt(vecs, queries, entries, graph, b, rs)
-      rs.map(r => serveSummaryOf(nq, truth, picksAt(r), b, r))
-    } else {
-      val walks = groups.map { case (b, cfgs) =>
-        val rs = cfgs.map(_._2)
-        (b, rs, Future(serveBeamPicksAt(vecs, queries, entries, graph, b, rs)))
-      }
-      walks.flatMap { case (b, rs, f) =>
-        val picksAt = Await.result(f, Duration.Inf)
-        rs.map(r => serveSummaryOf(nq, truth, picksAt(r), b, r))
-      }
-    }
-    Await.result(truthF, Duration.Inf)
-    rows.reduce(_ unionByName _).orderBy(col("beam"), col("rounds"))
+    val picksAt = serveBeamPicksAt(vecs, queries, entries, graph,
+      curve.map(_._1).distinct.sorted, curve.map(_._2).distinct)
+    curve.map { case (b, r) => serveSummaryOf(nq, truth, picksAt((b, r)), b, r) }
+      .reduce(_ unionByName _).orderBy(col("beam"), col("rounds"))
   }
 
   /** The incremental graph-maintenance kernel (round 19) shared by q244

@@ -540,6 +540,34 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"dim was broadcast — salted shuffle profile not exercised:\n$plan")
   }
 
+  /** Every `.scala` file of the query and pipeline packages. */
+  private def querySources: Seq[java.io.File] = Seq(
+      "src/main/scala/graft/queries",
+      "src/main/scala/graft/queries/pipeline",
+      "src/main/scala/graft/pipeline")
+    .map(new java.io.File(_)).filter(_.isDirectory)
+    .flatMap(_.listFiles.toSeq.filter(_.getName.endsWith(".scala")))
+
+  private def sourceLines(f: java.io.File): List[(String, Int)] = {
+    val src = scala.io.Source.fromFile(f, "UTF-8")
+    try src.getLines().zipWithIndex.toList finally src.close()
+  }
+
+  test("every query materializes on its calling thread: no scala.concurrent, no overlapLegs") {
+    // A leg forked onto the global pool and joined with a blocking
+    // Await can deadlock once legs nest, and two forked legs can race
+    // to fill one shared cache. Queries hand Spark the whole plan from
+    // the calling thread; parallelism lives inside Spark's scheduler.
+    val forkRe = "scala\\.concurrent|overlapLegs".r
+    val offenders = for {
+      f <- querySources
+      (line, i) <- sourceLines(f)
+      if forkRe.findFirstIn(line).isDefined
+    } yield s"${f.getName}:${i + 1} ${line.trim}"
+    assert(offenders.isEmpty,
+      s"driver-thread forks in query code:\n${offenders.mkString("\n")}")
+  }
+
   test("no broadcast() hint wraps a corpus-derived frame (r15 VERDICT #2/#3 class pin)") {
     // A broadcast() hint is a claim: "this frame is CONSTANT-BOUNDED —
     // its size does not grow with the corpus" (1-row totals, dictionary
@@ -606,8 +634,9 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
         "cb", "lut",
         // q245's FIXED 16-row synthesized query panel and 32-row entry
         // panel (both constant-size at any corpus — the serve path's
-        // per-query state is O(beam), never corpus-sized)
-        "queries", "entries",
+        // per-query state is O(beam), never corpus-sized), and that
+        // panel keyed once per walked beam width (16 x #widths rows)
+        "queries", "entries", "walkQs",
         // q255's stored-IVFPQ dictionaries (round 20): the 16-row
         // double-cast centroid table, the 1-row double-cast query
         // vector, and the PQ_M x PQ_K residual codebook — kilobytes by
@@ -627,16 +656,10 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
         // models: merge arrays, kept-vocab arrays, 1-row totals
         "best", "ids", "keptArr", "mergesArr", "tot"),
       "Unigram.scala" -> Set("m", "st")) // piece/score models
-    val srcDirs = Seq(
-      new java.io.File("src/main/scala/graft/queries"),
-      new java.io.File("src/main/scala/graft/queries/pipeline"),
-      new java.io.File("src/main/scala/graft/pipeline"))
     val hintRe = "broadcast\\(([A-Za-z0-9_]+)".r
     val offenders = for {
-      d <- srcDirs if d.isDirectory
-      f <- d.listFiles.toSeq if f.getName.endsWith(".scala")
-      src = scala.io.Source.fromFile(f, "UTF-8")
-      line <- try src.getLines().zipWithIndex.toList finally src.close()
+      f <- querySources
+      line <- sourceLines(f)
       if !line._1.trim.startsWith("//") && !line._1.trim.startsWith("*")
       m <- hintRe.findAllMatchIn(line._1)
       ident = m.group(1)
