@@ -14,7 +14,28 @@ package graft.nats
 final case class LedgerConfig(
     batchSize: Int = 1000,
     flushTimeoutMs: Long = 1000L,
-    maxBufferSize: Int = 10000)
+    maxBufferSize: Int = 10000) {
+  require(batchSize > 0, s"batchSize must be >= 1, got $batchSize")
+  require(maxBufferSize > 0, s"maxBufferSize must be >= 1, got $maxBufferSize")
+
+  /** The flush policy (reference should_create_batch,
+    * src/batch_buffer.rs:73-86), as a pure function: how many of the
+    * `available` rows to admit into the next batch. Full batches go as
+    * soon as they exist — up to `maxBatches` of them per trigger (the
+    * parity default is one RecordBatch per poll; more lets a deep backlog
+    * drain at transport speed, Kafka's maxOffsetsPerTrigger analog). A
+    * partial batch goes only when `partialDue` — the flush timeout has
+    * passed since the last admission, or the run is bounded
+    * (Trigger.AvailableNow), where waiting would only delay termination.
+    * Otherwise nothing: no empty batches. Shared by the live ledger and
+    * the replay consumer. */
+  def admittable(available: Long, maxBatches: Int, partialDue: Boolean): Long = {
+    val fullBatches = math.min(available / batchSize, math.max(1, maxBatches).toLong)
+    if (fullBatches > 0) fullBatches * batchSize
+    else if (available > 0 && partialDue) available
+    else 0L
+  }
+}
 
 /** Driver-side, thread-safe, offset-indexed row ledger — the Spark analog
   * of the reference's BatchBuffer + flush policy (src/batch_buffer.rs:41-209)
@@ -39,8 +60,6 @@ final case class LedgerConfig(
   * (src/batch_buffer_test.rs:78-100).
   */
 final class MessageLedger(config: LedgerConfig) {
-  require(config.batchSize > 0 && config.maxBufferSize > 0)
-
   // base = offset of rows.head; rows holds [base, base + rows.size)
   private var base = 0L
   private val rows = scala.collection.mutable.ArrayDeque.empty[String]
@@ -61,28 +80,16 @@ final class MessageLedger(config: LedgerConfig) {
 
   def droppedRows: Long = synchronized { dropped }
 
-  /** Flush-policy admission (reference should_create_batch,
-    * src/batch_buffer.rs:73-86): from `fromOffset`, declare the next batch
-    * end. A full batch is admitted as soon as batchSize rows are available;
-    * a partial batch only after flushTimeoutMs of admission silence; else
-    * the offset does not advance (no empty batches).
-    *
-    * `maxBatches` lifts the per-trigger admission from one batch (the
-    * parity default — one RecordBatch per poll) to up to that many FULL
-    * batches. batchSize stays the batch granularity (the reference's
-    * batch_size is RecordBatch size, and its executor consumes every
-    * batch its channel holds, src/executor.rs:74-130) while a deep
-    * backlog drains at transport speed instead of one batch per trigger
-    * interval — the same backlog knob as Kafka's maxOffsetsPerTrigger.
+  /** Flush-policy admission ([[LedgerConfig.admittable]]) from
+    * `fromOffset`: declare the next batch end, timing a partial batch
+    * from the last admission. batchSize stays the batch granularity (the
+    * reference's batch_size is RecordBatch size, and its executor
+    * consumes every batch its channel holds, src/executor.rs:74-130).
     */
   def admit(fromOffset: Long, nowMs: Long, maxBatches: Int = 1): Long = synchronized {
-    val available = base + rows.size - fromOffset
     if (lastAdmitMs == Long.MinValue) lastAdmitMs = nowMs // policy clock starts at first poll
-    val fullBatches = math.min(available / config.batchSize, math.max(1, maxBatches).toLong)
-    val admitted =
-      if (fullBatches > 0) fullBatches * config.batchSize
-      else if (available > 0 && nowMs - lastAdmitMs >= config.flushTimeoutMs) available
-      else 0L
+    val admitted = config.admittable(base + rows.size - fromOffset, maxBatches,
+      partialDue = nowMs - lastAdmitMs >= config.flushTimeoutMs)
     if (admitted > 0) lastAdmitMs = nowMs
     fromOffset + admitted
   }

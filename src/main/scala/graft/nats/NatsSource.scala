@@ -65,13 +65,18 @@ object NatsOptions {
         throw new IllegalArgumentException(s"format(\"nats\") requires option '$k'")
       v
     }
+    def positive(k: String, default: Int): Int = {
+      val n = options.getInt(k, default)
+      require(n >= 1, s"format(\"nats\") option '$k' must be >= 1, got $n")
+      n
+    }
     val subject = req("subject")
     NatsOptions(
       url = req("url"),
       subject = subject,
-      batchSize = options.getInt("batchSize", 1000),
+      batchSize = positive("batchSize", 1000),
       flushTimeoutMs = options.getLong("flushTimeoutMs", 1000L),
-      maxBufferSize = options.getInt("maxBufferSize", 10000),
+      maxBufferSize = positive("maxBufferSize", 10000),
       stopAtRows = Option(options.get("stopAtRows")).map(_.toLong),
       collectTimeoutMs = options.getLong("collectTimeoutMs", 5000L),
       numPartitions = options.getInt("numPartitions", 1),
@@ -140,11 +145,7 @@ object NatsOptions {
       // Sink-only: rows buffered per writer task before one pipelined
       // publish (and one TCP flush) — a flush per row caps the sink at
       // the syscall rate. 1 = the old per-row behavior.
-      publishBatchRows = {
-        val n = options.getInt("publishBatchRows", 500)
-        require(n >= 1, s"publishBatchRows must be >= 1, got $n")
-        n
-      },
+      publishBatchRows = positive("publishBatchRows", 500),
       // TLS trust for a `nats://` broker advertising tls_required, as a
       // SOURCE OPTION so it rides the serialized scan to every executor
       // (a driver-set -Dgraft.nats.tls.truststore only works single-JVM).
@@ -243,9 +244,8 @@ class NatsSourceProvider extends TableProvider with DataSourceRegister {
   *     arrival order (1-based) on a live one-shot batch read;
   *   - `_headers`: the message's NATS headers (HPUB/HMSG extension) as a
   *     string map, empty when the message carried none. Retained under
-  *     replay on backends that store them — the memory bus and real
-  *     JetStream (the $JS.API pull delivers HMSG) — and empty over the
-  *     graft wire FETCH, whose framing is payload-only.
+  *     replay: the memory bus stores them, and the JetStream pull
+  *     delivers them as HMSG.
   */
 object NatsMetadata {
   val SubjectCol = "_subject"
@@ -298,7 +298,7 @@ object NatsMetadata {
     column(SeqCol, LongType,
       "source sequence: broker sequence (replay), ledger offset (stream), arrival order (one-shot batch)"),
     column(HeadersCol, MapType(StringType, StringType, valueContainsNull = false),
-      "NATS message headers (HPUB/HMSG); empty map when none (replay: retained on memory:// and JetStream, empty over graft wire FETCH)"))
+      "NATS message headers (HPUB/HMSG); empty map when none (retained under replay)"))
 }
 
 /** One NATS subject as a table (reference src/data_source.rs:19-32).
@@ -419,7 +419,7 @@ final class NatsRowWriter(schema: StructType, opts: NatsOptions)
     // order is preserved (NATS ordering is per subject — cross-subject
     // interleaving carries no semantics).
     pending.groupBy(_._1).foreach { case (subj, rows) =>
-      conn.publishBatchWithHeaders(subj, rows.iterator.map(r => (r._2, r._3)))
+      conn.publishBatch(subj, rows.iterator.map(r => (r._2, r._3)))
     }
     pending.clear()
   }
@@ -693,7 +693,7 @@ private[nats] final class RowPipeline(
   private def deadLetter(subject: String, seq: Long, payload: String, err: String): Unit =
     opts.deadLetterSubject.foreach { dl =>
       if (dlConn == null) dlConn = NatsTransport.connect(opts.url, opts.tls)
-      dlConn.publishWithHeaders(dl,
+      dlConn.publish(dl,
         Seq(
           "Graft-Error" -> err.replaceAll("[\r\n]+", " "),
           "Graft-Source-Subject" -> subject,
@@ -826,7 +826,7 @@ final class NatsBatchReader(p: NatsBatchPartition) extends PartitionReader[Inter
   // filtered messages still consume an index — it names the message,
   // not the surviving row).
   private val arrivals = new java.util.concurrent.atomic.AtomicLong(0)
-  private val sub = conn.subscribeHeadersEach(p.opts.subject) { (subject, headers, payload) =>
+  private val sub = conn.subscribe(p.opts.subject, None) { (subject, headers, payload) =>
     // Count rows AFTER filtering, so a pushed filter + limit means
     // "first n matching rows" — the semantics DataFusion's limit gives
     // the reference.
@@ -963,7 +963,7 @@ private[nats] object NatsReplayPartition {
   * pulls the partition's sequence range in batchSize-bounded chunks —
   * memory stays O(chunk), not O(range), and the driver never touches the
   * bytes. Eviction between planning and execution still fails fast
-  * (fetchRetained throws), now as a task failure carrying the same
+  * (the range fetch throws), now as a task failure carrying the same
   * guidance. */
 private[nats] final class NatsReplayReader(p: NatsReplayPartition)
     extends PartitionReader[InternalRow] {
@@ -1003,9 +1003,8 @@ private[nats] final class NatsReplayReader(p: NatsReplayPartition)
             s"through $endSeq: messages were evicted or the broker lost them")
       val from = cursor
       cursor += want
-      // Headers come back from backends that retain them (memory bus,
-      // real JetStream); the graft wire FETCH is payload-only and yields
-      // empty maps (see NatsMetadata scaladoc).
+      // Headers come back with each retained message (memory bus and
+      // JetStream both retain them); headerless messages yield empty maps.
       it = msgs.iterator.zipWithIndex.flatMap { case ((headers, bytes), i) =>
         pipeline.decode(p.opts.subject, from + 1 + i,
           NatsMetadata.encodeHeaders(headers),
@@ -1051,8 +1050,8 @@ final class NatsMicroBatchStream(
             "JetStream (stream + durable consumer) on a real deployment.")
     }
 
-  private val ledger = new MessageLedger(
-    LedgerConfig(opts.batchSize, opts.flushTimeoutMs, opts.maxBufferSize))
+  private val policy = LedgerConfig(opts.batchSize, opts.flushTimeoutMs, opts.maxBufferSize)
+  private val ledger = new MessageLedger(policy)
   // Ledger appends are synchronized, so N concurrent queue members admit
   // each message exactly once (each message reaches exactly one member).
   // Every entry carries its envelope ("<subject>NUL<headers>NUL<payload>")
@@ -1084,8 +1083,8 @@ final class NatsMicroBatchStream(
     else opts.queueGroup match {
       case Some(g) =>
         (1 to math.max(1, opts.queueSubscribers))
-          .map(_ => conn.subscribeQueueHeadersEach(opts.subject, g)(onSubjectPayload))
-      case None => Seq(conn.subscribeHeadersEach(opts.subject)(onSubjectPayload))
+          .map(_ => conn.subscribe(opts.subject, Some(g))(onSubjectPayload))
+      case None => Seq(conn.subscribe(opts.subject, None)(onSubjectPayload))
     }
   private var admitted = 0L
   // Replay bookkeeping: the resolved start sequence (-1 until the first
@@ -1160,9 +1159,9 @@ final class NatsMicroBatchStream(
     }
   }
 
-  /** Replay-mode admission: same size-or-timeout flush policy as the
-    * ledger, but over broker sequences pulled from retention, advancing
-    * from the start offset SPARK hands us (authoritative). */
+  /** Replay-mode admission: the ledger's flush policy, but over broker
+    * sequences pulled from retention, advancing from the start offset
+    * SPARK hands us (authoritative). */
   private def replayLatestOffset(r: ReplayableNatsConnection, from: Long): NatsOffset = {
     if (replayStart < 0) replayStart = from // restart path: never saw initialOffset
     admitted = math.max(admitted, from)
@@ -1171,16 +1170,8 @@ final class NatsMicroBatchStream(
     val target =
       if (availableNowCap >= 0) math.min(r.currentSeq(opts.subject), availableNowCap)
       else r.currentSeq(opts.subject)
-    val available = target - admitted
-    val fullBatches =
-      math.min(available / opts.batchSize, math.max(1, opts.maxBatchesPerTrigger).toLong)
-    var adm =
-      if (fullBatches > 0) fullBatches * opts.batchSize
-      // bounded (AvailableNow) runs flush the final partial immediately —
-      // waiting out the timeout would only delay termination
-      else if (available > 0 &&
-        (availableNowCap >= 0 || now - replayLastAdmitMs >= opts.flushTimeoutMs)) available
-      else 0L
+    var adm = policy.admittable(target - admitted, opts.maxBatchesPerTrigger,
+      partialDue = availableNowCap >= 0 || now - replayLastAdmitMs >= opts.flushTimeoutMs)
     // stopAtRows counts rows THIS query consumed, so the cap is relative
     // to where the replay started.
     opts.stopAtRows.foreach(cap => adm = math.min(adm, replayStart + cap - admitted))
@@ -1210,10 +1201,10 @@ final class NatsMicroBatchStream(
         admitted = math.max(admitted, from)
         var end =
           if (availableNowCap >= 0)
-            // bounded run: drain toward the prepared snapshot one batch
-            // granule at a time, final partial included, no flush wait
-            math.min(admitted + opts.batchSize.toLong *
-              math.max(1, opts.maxBatchesPerTrigger), availableNowCap)
+            // bounded run: drain toward the prepared snapshot, final
+            // partial included, no flush wait
+            admitted + policy.admittable(availableNowCap - admitted,
+              opts.maxBatchesPerTrigger, partialDue = true)
           else ledger.admit(admitted, System.currentTimeMillis(), opts.maxBatchesPerTrigger)
         // stopAtRows reproduces the reference's LIMIT-terminated demo semantics
         // for streams (SURVEY §7.4.5): the offset simply stops advancing.

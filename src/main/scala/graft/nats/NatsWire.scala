@@ -12,11 +12,10 @@ import scala.jdk.CollectionConverters._
   * (docs.nats.io, "NATS protocol": INFO / CONNECT / PING / PONG / PUB /
   * SUB / UNSUB / MSG / +OK / -ERR) over a plain TCP socket.
   *
-  * This is the transport the `nats://` scheme routes to: unlike the
-  * reflection-loaded jnats adapter (which needs the official client jar
-  * on the classpath), this client is self-contained, and — paired with
-  * [[MiniNatsServer]] — every line of it is exercised against a real
-  * socket in `NatsWireSpec`, including the full DSv2 read/write path.
+  * This is the transport the `nats://` scheme routes to: the client is
+  * self-contained (no client jar), and — paired with [[MiniNatsServer]] —
+  * every line of it is exercised against a real socket in `NatsWireSpec`,
+  * including the full DSv2 read/write path.
   * The reference reaches its broker through async-nats
   * (src/nats_connection.rs:4-12, exercised by tests/integration_test.rs:14-76);
   * this speaks the same wire protocol directly.
@@ -160,9 +159,10 @@ private[nats] object NatsWire {
 
 /** NATS client over TCP. Thread-safe: publishes may come from any task
   * thread (writes serialize on `writeLock`); inbound MSGs dispatch on a
-  * single reader thread, matching the delivery model of both the
-  * in-memory bus (publisher thread) and jnats (dispatcher thread) —
-  * handlers must be quick and non-blocking (MessageLedger.append is).
+  * single reader thread, matching the delivery model of the in-memory
+  * bus (publisher thread) and of the official clients (dispatcher
+  * thread) — handlers must be quick and non-blocking
+  * (MessageLedger.append is).
   *
   * Resilience: a connection the SERVER drops (restart, idle kill, network
   * blip) is re-dialed by the reader thread with linear backoff and every
@@ -174,7 +174,7 @@ private[nats] object NatsWire {
   * `reconnectBufBytes` — the official clients' reconnect buffer) and
   * drained in order right after resubscribe; subscribe/unsubscribe during
   * the window likewise succeed locally and replay on reconnect. The BULK
-  * sink path (`publishBatchWithHeaders`) deliberately stays fail-fast:
+  * sink path (`publishBatch`) deliberately stays fail-fast:
   * a Spark task retry + `Nats-Msg-Id` stream dedup (q120) is strictly
   * stronger than a client-side buffer there. After `reconnectAttempts`
   * failed dials the client stays failed, buffered frames are dropped, and
@@ -247,8 +247,8 @@ final class TcpNatsClient(
   // constructor throws (no caller ever gets a close() to call) and a
   // reconnect attempt moves on to the next try.
   // On success the live socket/stream fields are swapped in and the
-  // server's advertised (graft_stream, jetstream) flags returned.
-  private def connectSocket(): (Boolean, Boolean) = {
+  // server's advertised jetstream flag returned.
+  private def connectSocket(): Boolean = {
     val plainSock = new Socket()
     plainSock.connect(new InetSocketAddress(host, port), 5000)
     plainSock.setTcpNoDelay(true)
@@ -307,16 +307,14 @@ final class TcpNatsClient(
       // Honor the server's advertised payload ceiling (INFO max_payload):
       // a PUB above it draws -ERR 'Maximum Payload Violation' and real
       // servers close the connection — reject locally instead. Also note
-      // which retention surfaces the server advertises: the graft
-      // extension (INFO graft_stream) or real JetStream (INFO jetstream,
-      // what `nats-server -js` sends) — NatsTransport wraps the
-      // connection as replayable for either.
+      // whether the server advertises JetStream (INFO jetstream, what
+      // `nats-server -js` sends) — NatsTransport then wraps the
+      // connection as replayable.
       serverMaxPayload = "\"max_payload\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(info)
         .map(_.group(1).toLong min NatsWire.MaxPayload.toLong)
         .getOrElse(NatsWire.MaxPayload.toLong).toInt
       socket = sock; in = i; out = o
-      ("\"graft_stream\"\\s*:\\s*true".r.findFirstIn(info).isDefined,
-        "\"jetstream\"\\s*:\\s*true".r.findFirstIn(info).isDefined)
+      "\"jetstream\"\\s*:\\s*true".r.findFirstIn(info).isDefined
     } catch {
       case e: Throwable =>
         try sock.close() catch { case _: IOException => () }
@@ -324,17 +322,11 @@ final class TcpNatsClient(
     }
   }
 
-  private val (graftStream: Boolean, jetStream: Boolean) = connectSocket()
-
-  /** Did INFO advertise the graft retention API ([[MiniNatsServer]] with
-    * `retainCapacity > 0`)? Decides whether [[NatsTransport.connect]]
-    * wraps this client as replayable via [[GraftStreamTcpConnection]]. */
-  private[nats] def supportsRetention: Boolean = graftStream
-
   /** Did INFO advertise JetStream (`"jetstream":true`, what a real
-    * `nats-server -js` sends)? [[NatsTransport.connect]] then wraps this
-    * client as replayable via [[JetStreamTcpConnection]]. */
-  private[nats] def supportsJetStream: Boolean = jetStream
+    * `nats-server -js` and a retaining [[MiniNatsServer]] send)?
+    * [[NatsTransport.connect]] then wraps this client as replayable via
+    * [[JetStreamTcpConnection]]. */
+  private[nats] val supportsJetStream: Boolean = connectSocket()
 
   private def write(s: String): Unit = out.write(s.getBytes(US_ASCII))
 
@@ -455,78 +447,52 @@ final class TcpNatsClient(
     if (e != null) throw new IOException(s"NATS server error: $e")
   }
 
-  def publish(subject: String, payload: Array[Byte]): Unit = {
-    NatsSubjects.validateSubject(subject)
-    checkHealthy()
-    require(payload.length <= serverMaxPayload,
-      s"payload ${payload.length} exceeds server max_payload $serverMaxPayload")
-    val head = s"PUB $subject ${payload.length}\r\n".getBytes(US_ASCII)
-    val frame = new Array[Byte](head.length + payload.length + 2)
-    System.arraycopy(head, 0, frame, 0, head.length)
-    System.arraycopy(payload, 0, frame, head.length, payload.length)
-    frame(frame.length - 2) = '\r'; frame(frame.length - 1) = '\n'
-    writeFrameOrBuffer(frame)
+  /** One PUB frame, or an HPUB frame when there are headers (both size
+    * tokens are bytes: header block first, then total = headers +
+    * payload). Checked against the server's max_payload. */
+  private def frame(subject: String, headers: Seq[(String, String)],
+      payload: Array[Byte]): Array[Byte] = {
+    val block = if (headers.isEmpty) Array.emptyByteArray else NatsWire.encodeHeaders(headers)
+    val total = block.length + payload.length
+    require(total <= serverMaxPayload,
+      s"${if (headers.isEmpty) "payload" else "headers+payload"} $total exceeds server " +
+        s"max_payload $serverMaxPayload")
+    val head = (if (headers.isEmpty) s"PUB $subject $total\r\n"
+      else s"HPUB $subject ${block.length} $total\r\n").getBytes(US_ASCII)
+    val f = new Array[Byte](head.length + total + 2)
+    System.arraycopy(head, 0, f, 0, head.length)
+    System.arraycopy(block, 0, f, head.length, block.length)
+    System.arraycopy(payload, 0, f, head.length + block.length, payload.length)
+    f(f.length - 2) = '\r'; f(f.length - 1) = '\n'
+    f
   }
 
-  /** HPUB: headers + payload in one frame; both size tokens are bytes
-    * (header block first, then total = headers + payload). */
-  override def publishWithHeaders(
-      subject: String, headers: Seq[(String, String)],
-      payload: Array[Byte]): Unit = {
-    if (headers.isEmpty) { publish(subject, payload); return }
+  def publish(subject: String, headers: Seq[(String, String)], payload: Array[Byte]): Unit = {
     NatsSubjects.validateSubject(subject)
     checkHealthy()
-    val block = NatsWire.encodeHeaders(headers)
-    require(block.length + payload.length <= serverMaxPayload,
-      s"headers+payload ${block.length + payload.length} exceeds server " +
-        s"max_payload $serverMaxPayload")
-    val head = (s"HPUB $subject ${block.length} " +
-      s"${block.length + payload.length}\r\n").getBytes(US_ASCII)
-    val frame = new Array[Byte](head.length + block.length + payload.length + 2)
-    System.arraycopy(head, 0, frame, 0, head.length)
-    System.arraycopy(block, 0, frame, head.length, block.length)
-    System.arraycopy(payload, 0, frame, head.length + block.length, payload.length)
-    frame(frame.length - 2) = '\r'; frame(frame.length - 1) = '\n'
-    writeFrameOrBuffer(frame)
+    writeFrameOrBuffer(frame(subject, headers, payload))
   }
 
   /** One lock acquisition, one flush for the whole run: PUB/HPUB frames
     * pipeline through the buffered stream back-to-back — the NATS client
     * idiom for bulk publish (a flush per message caps throughput at the
     * syscall rate). Per-message size checks are unchanged. */
-  override def publishBatchWithHeaders(subject: String,
+  def publishBatch(subject: String,
       msgs: Iterator[(Seq[(String, String)], Array[Byte])]): Unit = {
     NatsSubjects.validateSubject(subject)
     checkHealthy()
     writeLock.synchronized {
-      msgs.foreach {
-        case (headers, payload) if headers.isEmpty =>
-          require(payload.length <= serverMaxPayload,
-            s"payload ${payload.length} exceeds server max_payload $serverMaxPayload")
-          write(s"PUB $subject ${payload.length}\r\n")
-          out.write(payload)
-          write("\r\n")
-        case (headers, payload) =>
-          val block = NatsWire.encodeHeaders(headers)
-          require(block.length + payload.length <= serverMaxPayload,
-            s"headers+payload ${block.length + payload.length} exceeds server " +
-              s"max_payload $serverMaxPayload")
-          write(s"HPUB $subject ${block.length} ${block.length + payload.length}\r\n")
-          out.write(block)
-          out.write(payload)
-          write("\r\n")
-      }
+      msgs.foreach { case (headers, payload) => out.write(frame(subject, headers, payload)) }
       out.flush()
     }
   }
 
-  private def sub(subject: String, group: Option[String])(
-      handler: (String, Array[Byte]) => Unit): NatsSubscription =
-    subRaw(subject, group)((subj, _, _, p) => handler(subj, p))
+  def subscribe(pattern: String, queueGroup: Option[String])(
+      handler: (String, Seq[(String, String)], Array[Byte]) => Unit): NatsSubscription =
+    subRaw(pattern, queueGroup)((subj, _, hdrs, p) => handler(subj, hdrs, p))
 
-  /** [[sub]] with the delivery's reply-to (null when absent) and headers
-    * surfaced — JetStream pull metadata rides the reply-to, HMSG frames
-    * carry the headers. */
+  /** [[subscribe]] with the delivery's reply-to (null when absent)
+    * surfaced — JetStream pull metadata rides the reply-to. */
   private def subRaw(subject: String, group: Option[String])(
       handler: (String, String, Seq[(String, String)], Array[Byte]) => Unit): NatsSubscription = {
     NatsSubjects.validatePattern(subject)
@@ -556,35 +522,12 @@ final class TcpNatsClient(
     }
   }
 
-  def subscribe(subject: String)(handler: Array[Byte] => Unit): NatsSubscription =
-    sub(subject, None)((_, p) => handler(p))
-
-  def subscribeEach(subject: String)(
-      handler: (String, Array[Byte]) => Unit): NatsSubscription =
-    sub(subject, None)(handler)
-
-  def subscribeQueue(subject: String, group: String)(
-      handler: Array[Byte] => Unit): NatsSubscription =
-    sub(subject, Some(group))((_, p) => handler(p))
-
-  def subscribeQueueEach(subject: String, group: String)(
-      handler: (String, Array[Byte]) => Unit): NatsSubscription =
-    sub(subject, Some(group))(handler)
-
-  override def subscribeHeadersEach(subject: String)(
-      handler: (String, Seq[(String, String)], Array[Byte]) => Unit): NatsSubscription =
-    subRaw(subject, None)((subj, _, hdrs, p) => handler(subj, hdrs, p))
-
-  override def subscribeQueueHeadersEach(subject: String, group: String)(
-      handler: (String, Seq[(String, String)], Array[Byte]) => Unit): NatsSubscription =
-    subRaw(subject, Some(group))((subj, _, hdrs, p) => handler(subj, hdrs, p))
-
   /** Synchronous request-reply over core NATS primitives (the pattern
     * real clients implement the same way: PUB with a unique `_INBOX.*`
     * reply-to + a subscription on it). Collects reply payloads until
     * `done` returns true for one; throws on timeout. Multi-reply is what
-    * the JetStream-style FETCH needs — each retained message arrives as
-    * its own MSG frame, binary-safe for free.
+    * a JetStream pull needs — each retained message arrives as its own
+    * MSG frame, binary-safe for free.
     */
   private[nats] def request(
       subject: String,
@@ -639,112 +582,6 @@ final class TcpNatsClient(
   }
 }
 
-/** Replay over the wire: the retention capability
-  * ([[ReplayableNatsConnection]]) spoken as a minimal JetStream-STYLE
-  * protocol on top of core request-reply — the client publishes to
-  * `$GRAFT.STREAM.INFO.<subject>` / `$GRAFT.STREAM.FETCH.<subject>` with
-  * an `_INBOX.*` reply-to, and the server answers on the inbox: INFO with
-  * one `"<earliest> <current>"` line; FETCH with one `+<seq> <payload>`
-  * MSG per retained message and a terminal `#END` (or `#ERR <earliest>`
-  * when the range fell out of retention — the fail-fast the checkpoint
-  * contract requires). The shape mirrors a real JetStream pull consumer
-  * (fetch request → per-message MSG frames to the reply inbox); the API
-  * subjects are graft-specific, which is why the server must advertise
-  * `graft_stream` in INFO before [[NatsTransport]] selects this wrapper —
-  * a vanilla core-NATS broker stays fire-and-forget and `replay=true`
-  * keeps failing fast against it.
-  */
-private[nats] final class GraftStreamTcpConnection(c: TcpNatsClient)
-    extends ReplayableNatsConnection {
-
-  def publish(subject: String, payload: Array[Byte]): Unit = c.publish(subject, payload)
-  def subscribe(subject: String)(handler: Array[Byte] => Unit): NatsSubscription =
-    c.subscribe(subject)(handler)
-  def subscribeEach(subject: String)(
-      handler: (String, Array[Byte]) => Unit): NatsSubscription =
-    c.subscribeEach(subject)(handler)
-  def subscribeQueue(subject: String, group: String)(
-      handler: Array[Byte] => Unit): NatsSubscription =
-    c.subscribeQueue(subject, group)(handler)
-  def subscribeQueueEach(subject: String, group: String)(
-      handler: (String, Array[Byte]) => Unit): NatsSubscription =
-    c.subscribeQueueEach(subject, group)(handler)
-  override def publishWithHeaders(subject: String, headers: Seq[(String, String)],
-      payload: Array[Byte]): Unit = c.publishWithHeaders(subject, headers, payload)
-  override def publishBatchWithHeaders(subject: String,
-      msgs: Iterator[(Seq[(String, String)], Array[Byte])]): Unit =
-    c.publishBatchWithHeaders(subject, msgs)
-  override def subscribeHeadersEach(subject: String)(
-      handler: (String, Seq[(String, String)], Array[Byte]) => Unit): NatsSubscription =
-    c.subscribeHeadersEach(subject)(handler)
-  override def subscribeQueueHeadersEach(subject: String, group: String)(
-      handler: (String, Seq[(String, String)], Array[Byte]) => Unit): NatsSubscription =
-    c.subscribeQueueHeadersEach(subject, group)(handler)
-  def close(): Unit = c.close()
-
-  private def streamInfo(subject: String): (Long, Long) = {
-    NatsSubjects.validateSubject(subject)
-    val reply = c.request(s"$$GRAFT.STREAM.INFO.$subject", Array.emptyByteArray)(_ => true).head
-    val line = new String(reply, US_ASCII)
-    if (line.startsWith("#ERR"))
-      throw new IllegalStateException(s"stream info on '$subject' failed: $line")
-    val parts = line.split(" ")
-    (parts(0).toLong, parts(1).toLong)
-  }
-
-  def currentSeq(subject: String): Long = streamInfo(subject)._2
-  def earliestRetained(subject: String): Long = streamInfo(subject)._1
-
-  def fetchRetained(subject: String, afterSeq: Long, max: Int): Array[Array[Byte]] = {
-    NatsSubjects.validateSubject(subject)
-    if (max <= 0) return Array.empty
-    val replies = c.request(
-      s"$$GRAFT.STREAM.FETCH.$subject",
-      s"$afterSeq $max".getBytes(US_ASCII))(m => m.nonEmpty && m(0) == '#')
-    val terminal = new String(replies.last, US_ASCII)
-    if (terminal.startsWith("#ERR")) {
-      val earliest = terminal.split(" ").lift(1).getOrElse("?")
-      throw new IllegalStateException(
-        s"sequence ${afterSeq + 1} on '$subject' is beyond the retention " +
-          s"window (earliest retained: $earliest): the checkpointed position " +
-          "was evicted")
-    }
-    replies.init.map { m =>
-      // "+<seq> <payload bytes>": our framing ends at the first space
-      val sp = m.indexOf(' '.toByte)
-      java.util.Arrays.copyOfRange(m, sp + 1, m.length)
-    }.toArray
-  }
-
-  /** Replay WITH the retained headers: the server delivers each FETCH
-    * reply as HMSG carrying the message's stored header block (retention
-    * rings keep (headers, payload) pairs — VERDICT r12 gap #2 closed),
-    * so a dead-letter audit replaying a quarantine subject sees the same
-    * error/envelope headers live delivery carried. Servers predating
-    * header retention deliver plain MSG and this degrades to empty
-    * headers — the old behavior, never an error. */
-  override def fetchRetainedWithHeaders(
-      subject: String, afterSeq: Long, max: Int): Array[(Seq[(String, String)], Array[Byte])] = {
-    NatsSubjects.validateSubject(subject)
-    if (max <= 0) return Array.empty
-    val replies = c.requestRaw(
-      s"$$GRAFT.STREAM.FETCH.$subject",
-      s"$afterSeq $max".getBytes(US_ASCII))((_, m) => m.nonEmpty && m(0) == '#')
-    val terminal = new String(replies.last._3, US_ASCII)
-    if (terminal.startsWith("#ERR")) {
-      val earliest = terminal.split(" ").lift(1).getOrElse("?")
-      throw new IllegalStateException(
-        s"sequence ${afterSeq + 1} on '$subject' is beyond the retention " +
-          s"window (earliest retained: $earliest): the checkpointed position " +
-          "was evicted")
-    }
-    replies.init.map { case (_, hdrs, m) =>
-      val sp = m.indexOf(' '.toByte)
-      (hdrs, java.util.Arrays.copyOfRange(m, sp + 1, m.length))
-    }.toArray
-  }
-}
-
 /** Replay over REAL JetStream (docs.nats.io, "NATS JetStream API
   * Reference"): the retention capability spoken as the public `$JS.API`
   * request-reply surface, selected when the broker advertises
@@ -777,29 +614,13 @@ private[nats] final class JetStreamTcpConnection(c: TcpNatsClient)
     extends ReplayableNatsConnection {
   import java.nio.charset.StandardCharsets.UTF_8
 
-  def publish(subject: String, payload: Array[Byte]): Unit = c.publish(subject, payload)
-  def subscribe(subject: String)(handler: Array[Byte] => Unit): NatsSubscription =
-    c.subscribe(subject)(handler)
-  def subscribeEach(subject: String)(
-      handler: (String, Array[Byte]) => Unit): NatsSubscription =
-    c.subscribeEach(subject)(handler)
-  def subscribeQueue(subject: String, group: String)(
-      handler: Array[Byte] => Unit): NatsSubscription =
-    c.subscribeQueue(subject, group)(handler)
-  def subscribeQueueEach(subject: String, group: String)(
-      handler: (String, Array[Byte]) => Unit): NatsSubscription =
-    c.subscribeQueueEach(subject, group)(handler)
-  override def publishWithHeaders(subject: String, headers: Seq[(String, String)],
-      payload: Array[Byte]): Unit = c.publishWithHeaders(subject, headers, payload)
-  override def publishBatchWithHeaders(subject: String,
-      msgs: Iterator[(Seq[(String, String)], Array[Byte])]): Unit =
-    c.publishBatchWithHeaders(subject, msgs)
-  override def subscribeHeadersEach(subject: String)(
+  def publish(subject: String, headers: Seq[(String, String)], payload: Array[Byte]): Unit =
+    c.publish(subject, headers, payload)
+  def publishBatch(subject: String,
+      msgs: Iterator[(Seq[(String, String)], Array[Byte])]): Unit = c.publishBatch(subject, msgs)
+  def subscribe(pattern: String, queueGroup: Option[String])(
       handler: (String, Seq[(String, String)], Array[Byte]) => Unit): NatsSubscription =
-    c.subscribeHeadersEach(subject)(handler)
-  override def subscribeQueueHeadersEach(subject: String, group: String)(
-      handler: (String, Seq[(String, String)], Array[Byte]) => Unit): NatsSubscription =
-    c.subscribeQueueHeadersEach(subject, group)(handler)
+    c.subscribe(pattern, queueGroup)(handler)
   def close(): Unit = c.close()
 
   private val streamCache = new ConcurrentHashMap[String, String]()
@@ -874,21 +695,12 @@ private[nats] final class JetStreamTcpConnection(c: TcpNatsClient)
   def currentSeq(subject: String): Long = state(subject)._2
   def earliestRetained(subject: String): Long = state(subject)._1
 
-  def fetchRetained(subject: String, afterSeq: Long, max: Int): Array[Array[Byte]] =
-    fetchRetainedWithHeaders(subject, afterSeq, max).map(_._2)
-
-  override def fetchRetainedWithHeaders(
-      subject: String, afterSeq: Long, max: Int): Array[(Seq[(String, String)], Array[Byte])] = {
-    val session = openRangeFetch(subject, afterSeq)
-    try session.next(max) finally session.close()
-  }
-
   /** One ephemeral pull consumer serves the WHOLE range: chunked readers
     * (NatsReplayReader pulls batchSize at a time) cost one
     * CREATE/DELETE per partition instead of one per chunk — a 10M-row
     * partition at batchSize 1000 would otherwise churn 10,000 consumers
     * and re-fetch stream state as many times. */
-  override def openRangeFetch(subject: String, afterSeq: Long): RangeFetch = new RangeFetch {
+  def openRangeFetch(subject: String, afterSeq: Long): RangeFetch = new RangeFetch {
     private var cursor = afterSeq
     // Resolved lazily so an immediately-empty subject costs one INFO and
     // no consumer; `last` is the stream end at open time — the planned
@@ -984,30 +796,22 @@ private[nats] final class JetStreamTcpConnection(c: TcpNatsClient)
   * authorized CONNECT — answers `-ERR 'Authorization Violation'` and
   * closes the connection, the documented server behavior.
   *
-  * `retainCapacity > 0` turns on the JetStream-style retention extension
-  * (see [[GraftStreamTcpConnection]]): every published message is also
-  * sequenced into a bounded per-subject ring, `graft_stream` is
-  * advertised in INFO, and `$GRAFT.STREAM.INFO/FETCH` requests are
-  * answered — what a real deployment gets from a JetStream-enabled
-  * broker. The default (0) stays pure core NATS: fire-and-forget,
-  * nothing retained, `replay=true` correctly rejected.
-  *
-  * `jetStream = true` (requires `retainCapacity > 0`) speaks the PUBLIC
-  * JetStream API subset instead ([[JetStreamTcpConnection]]'s shapes):
-  * INFO advertises `"jetstream":true` exactly like `nats-server -js`
-  * (graft_stream is NOT advertised — the public protocol is the one
-  * under test), each published literal subject is auto-captured by a
-  * limits-based stream named after it (dots → underscores), and
-  * `$JS.API.STREAM.NAMES` / `STREAM.INFO` / `CONSUMER.CREATE` /
+  * `retainCapacity > 0` turns on JetStream: the server speaks the PUBLIC
+  * JetStream API subset ([[JetStreamTcpConnection]]'s shapes). INFO
+  * advertises `"jetstream":true` exactly like `nats-server -js`, each
+  * published literal subject is auto-captured by a limits-based stream
+  * (`max_msgs = retainCapacity`, named by [[MiniNatsServer.streamName]]),
+  * and `$JS.API.STREAM.NAMES` / `STREAM.INFO` / `CONSUMER.CREATE` /
   * `CONSUMER.MSG.NEXT` / `CONSUMER.DELETE` are answered with the
   * documented JSON bodies; pull deliveries carry their stream sequence
-  * in the `$JS.ACK.…` reply-to, as real servers do.
+  * in the `$JS.ACK.…` reply-to, as real servers do. The default (0)
+  * stays pure core NATS: fire-and-forget, nothing retained,
+  * `replay=true` correctly rejected.
   */
 final class MiniNatsServer(
     authToken: Option[String] = None,
     authUserPass: Option[(String, String)] = None,
     retainCapacity: Int = 0,
-    jetStream: Boolean = false,
     // Advertise-only (no actual TLS upgrade follows): lets specs pin the
     // client's behavior against a broker whose INFO demands TLS but whose
     // socket then refuses the handshake (misconfigured terminator).
@@ -1027,46 +831,16 @@ final class MiniNatsServer(
     fixedPort: Int = 0) {
   import NatsWire._
 
-  require(!jetStream || retainCapacity > 0,
-    "jetStream mode needs retainCapacity > 0 (streams ARE the retention)")
-
   private val authRequired = authToken.isDefined || authUserPass.isDefined
 
-  // Per-subject bounded retention ring (sequences start at 1, never
-  // reset; newest `retainCapacity` kept) — same semantics as the memory
-  // bus' ring and, at deployment scale, a JetStream limits-based stream.
-  // Headers are retained alongside each payload, as real JetStream does;
-  // the graft FETCH framing is payload-only, the $JS.API pull carries
-  // them back out as HMSG.
-  private final class Ring {
-    var nextSeq = 1L
-    val buf = scala.collection.mutable.ArrayDeque.empty[(Seq[(String, String)], Array[Byte])]
-    // JetStream `Nats-Msg-Id` dedup at stream ingest (see
-    // NatsSubjects.MsgIdHeader): count-bounded window analog.
-    private val seenIds = scala.collection.mutable.LinkedHashSet.empty[String]
-    def duplicate(headers: Seq[(String, String)]): Boolean =
-      headers.collectFirst { case (NatsSubjects.MsgIdHeader, v) => v } match {
-        case None => false
-        case Some(id) if seenIds.contains(id) => true
-        case Some(id) =>
-          seenIds.add(id)
-          if (seenIds.size > retainCapacity) seenIds.remove(seenIds.head)
-          false
-      }
-    def earliest: Long = nextSeq - buf.size
-    def append(headers: Seq[(String, String)], p: Array[Byte]): Unit = {
-      buf.append((headers, p))
-      nextSeq += 1
-      if (buf.size > retainCapacity) buf.removeHead()
-    }
-  }
-  private val rings = new ConcurrentHashMap[String, Ring]()
-  // JetStream mode: stream name (dots → underscores) → captured subject
+  // Per-subject retention (one JetStream stream per literal subject) and
+  // its stream name → subject index.
+  private val rings = new ConcurrentHashMap[String, RetentionRing]()
   private val jsSubjects = new ConcurrentHashMap[String, String]()
-  private def ringFor(subject: String): Ring =
+  private def ringFor(subject: String): RetentionRing =
     rings.computeIfAbsent(subject, s => {
-      if (jetStream) jsSubjects.put(s.replace('.', '_'), s)
-      new Ring
+      jsSubjects.put(MiniNatsServer.streamName(s), s)
+      new RetentionRing(retainCapacity)
     })
 
   // ---- the public JetStream API subset ($JS.API.…) ----
@@ -1089,7 +863,7 @@ final class MiniNatsServer(
     if (subject == "$JS.API.STREAM.NAMES") {
       val filter = jsonField(body, "subject")
       val names = filter match {
-        case Some(s) if rings.containsKey(s) => Seq(s.replace('.', '_'))
+        case Some(s) if rings.containsKey(s) => Seq(MiniNatsServer.streamName(s))
         case Some(_)                         => Seq.empty
         case None                            => jsSubjects.keySet.asScala.toSeq.sorted
       }
@@ -1099,8 +873,8 @@ final class MiniNatsServer(
       val name = subject.stripPrefix("$JS.API.STREAM.INFO.")
       val subj = jsSubjects.get(name)
       if (subj == null) { notFound("stream", 10059); return }
-      val r = ringFor(subj)
-      val (first, last, msgs) = r.synchronized { (r.earliest, r.nextSeq - 1, r.buf.size) }
+      val (first, last) = ringFor(subj).bounds
+      val msgs = last - first + 1
       val subjectsJson =
         jsAdvertiseSubjects.getOrElse(Seq(subj)).map(jsonStr).mkString("[", ",", "]")
       respond(s"""{"type":"io.nats.jetstream.api.v1.stream_info_response","config":{"name":${jsonStr(name)},"subjects":$subjectsJson,"retention":"limits","max_msgs":$retainCapacity},"state":{"messages":$msgs,"first_seq":$first,"last_seq":$last}}""")
@@ -1108,11 +882,10 @@ final class MiniNatsServer(
       val name = subject.stripPrefix("$JS.API.CONSUMER.CREATE.")
       val subj = jsSubjects.get(name)
       if (subj == null) { notFound("stream", 10059); return }
-      val r = ringFor(subj)
+      lazy val earliest = ringFor(subj).bounds._1
       val start = jsonField(body, "deliver_policy") match {
-        case Some("by_start_sequence") =>
-          jsonLongField(body, "opt_start_seq").getOrElse(r.synchronized(r.earliest))
-        case _ => r.synchronized(r.earliest) // deliver_policy "all"
+        case Some("by_start_sequence") => jsonLongField(body, "opt_start_seq").getOrElse(earliest)
+        case _ => earliest // deliver_policy "all"
       }
       val cname = s"eph${nextEphemeral.getAndIncrement()}"
       jsConsumers.put(s"$name/$cname", new JsConsumer(subj, start))
@@ -1124,22 +897,19 @@ final class MiniNatsServer(
       if (consumer == null) { notFound("consumer", 10014); return }
       val batch = jsonLongField(body, "batch").getOrElse(1L)
       val r = ringFor(consumer.subject)
-      r.synchronized {
+      consumer.synchronized {
         // real JS skips nothing below first_seq unless evicted — if the
         // cursor fell behind retention, delivery resumes at the head and
-        // the client's positional sequence check reports the gap loudly
-        if (consumer.cursor < r.earliest) consumer.cursor = r.earliest
-        var sent = 0L
-        while (sent < batch && consumer.cursor < r.nextSeq) {
-          val seq = consumer.cursor
-          val ack = s"$$JS.ACK.$name.$cname.1.$seq.$seq.0.${r.nextSeq - 1 - seq}"
-          val (hdrs, payload) = r.buf((seq - r.earliest).toInt)
-          route(reply, payload, ack, hdrs)
-          consumer.cursor += 1
-          sent += 1
+        // the client's positional sequence check reports the gap loudly.
+        // Fewer than batch available: a real pull request would sit and
+        // expire; the fetch client never over-requests, so nothing to do.
+        val (start, msgs) = r.from(consumer.cursor, batch)
+        val last = r.bounds._2
+        msgs.iterator.zipWithIndex.foreach { case ((hdrs, payload), i) =>
+          val seq = start + i
+          route(reply, payload, s"$$JS.ACK.$name.$cname.1.$seq.$seq.0.${last - seq}", hdrs)
         }
-        // fewer than batch available: a real pull request would sit and
-        // expire; the fetch client never over-requests, so nothing to do
+        consumer.cursor = start + msgs.length
       }
     } else if (subject.startsWith("$JS.API.CONSUMER.DELETE.")) {
       val rest = subject.stripPrefix("$JS.API.CONSUMER.DELETE.").split("\\.", 2)
@@ -1148,43 +918,6 @@ final class MiniNatsServer(
         respond("""{"type":"io.nats.jetstream.api.v1.consumer_delete_response","success":true}""")
       else notFound("consumer", 10014)
     } else notFound("api endpoint", 10002)
-  }
-
-  /** Answer a `$GRAFT.STREAM.*` request on its reply inbox. Runs on the
-    * requesting connection's thread; replies route like any publish, so
-    * they reach whichever connection holds the inbox subscription. */
-  private def streamApi(subject: String, reply: String, payload: Array[Byte]): Unit = {
-    if (reply == null) return // request-reply only: no inbox, no answer
-    def respond(s: String): Unit = route(reply, s.getBytes(US_ASCII))
-    if (retainCapacity <= 0) { respond("#ERR retention not enabled"); return }
-    if (subject.startsWith("$GRAFT.STREAM.INFO.")) {
-      val r = ringFor(subject.stripPrefix("$GRAFT.STREAM.INFO."))
-      r.synchronized { respond(s"${r.earliest} ${r.nextSeq - 1}") }
-    } else if (subject.startsWith("$GRAFT.STREAM.FETCH.")) {
-      val args = new String(payload, US_ASCII).split(" ")
-      val after = args(0).toLong
-      val max = args(1).toLong
-      val r = ringFor(subject.stripPrefix("$GRAFT.STREAM.FETCH."))
-      r.synchronized {
-        val from = after + 1
-        if (from < r.earliest && from < r.nextSeq) respond(s"#ERR ${r.earliest}")
-        else {
-          val upTo = math.min(after + math.max(0L, max), r.nextSeq - 1)
-          var seq = from
-          while (seq <= upTo) {
-            val prefix = s"+$seq ".getBytes(US_ASCII)
-            // Replay carries the message's RETAINED headers (as HMSG, for
-            // clients that opted in) — a dead-letter audit replaying a
-            // quarantine subject must see the same error/envelope headers
-            // live delivery carried (VERDICT r12 gap #2).
-            val (hdrs, pay) = r.buf((seq - r.earliest).toInt)
-            route(reply, prefix ++ pay, null, hdrs)
-            seq += 1
-          }
-          respond("#END")
-        }
-      }
-    } else respond("#ERR unknown stream api")
   }
 
   private val server = {
@@ -1282,8 +1015,7 @@ final class MiniNatsServer(
           s"""\"auth_required\":$authRequired,""" +
           s"""\"tls_required\":${tlsRequired || tlsKeystore.isDefined},""" +
           s"""\"headers\":true,""" +
-          s"""\"graft_stream\":${retainCapacity > 0 && !jetStream},""" +
-          s"""\"jetstream\":$jetStream,""" +
+          s"""\"jetstream\":${retainCapacity > 0},""" +
           s"""\"max_payload\":$MaxPayload}\r\n""")
         // TLS mode: the plaintext INFO above is the last cleartext byte —
         // upgrade server-side and continue the protocol encrypted, the
@@ -1364,24 +1096,19 @@ final class MiniNatsServer(
     }
 
     /** Shared PUB/HPUB tail: API subjects answer request-reply; ordinary
-      * subjects retain (payload only — the graft rings don't store
-      * headers) and route, headers delivered to opted-in subscribers. */
+      * subjects retain (with their headers) and route, headers delivered
+      * to opted-in subscribers. */
     private def handlePub(subject: String, reply: String,
         headers: Seq[(String, String)], payload: Array[Byte]): Unit = {
       if (subject.startsWith("$JS.API."))
         jsApi(subject, reply, payload)
-      else if (subject.startsWith("$GRAFT.STREAM."))
-        streamApi(subject, reply, payload)
       else if (valid(() => NatsSubjects.validateSubject(subject))) {
         // Retention first (when enabled), like the memory bus: a
         // message is sequenced whether or not anyone subscribes —
         // that is the point of replay — then push-delivered.
-        if (retainCapacity > 0) {
-          val r = ringFor(subject)
-          // duplicate Nats-Msg-Id: skip stream ingest only — routing
-          // below still delivers the publish to live subscribers
-          r.synchronized { if (!r.duplicate(headers)) r.append(headers, payload) }
-        }
+        // (a duplicate Nats-Msg-Id skips stream ingest only — routing
+        // below still delivers the publish to live subscribers)
+        if (retainCapacity > 0) ringFor(subject).append(headers, payload)
         route(subject, payload, reply, headers)
       }
       else send("-ERR 'Invalid Subject'\r\n")
@@ -1445,5 +1172,17 @@ final class MiniNatsServer(
     try server.close() catch { case _: IOException => () }
     clients.forEach(_.disconnect()) // reader threads exit on socket close
     acceptor.join(2000)
+  }
+}
+
+object MiniNatsServer {
+  /** The stream capturing `subject`: dots become `_` (stream names may
+    * not contain dots), and `_` / `-` escape as `-_` / `--` so the
+    * mapping stays injective — `a.b` and `a_b` get different streams. */
+  def streamName(subject: String): String = subject.flatMap {
+    case '.' => "_"
+    case '_' => "-_"
+    case '-' => "--"
+    case c   => c.toString
   }
 }

@@ -654,10 +654,10 @@ object Streaming {
         .writeStream.format("memory").queryName(sink).start()
       try {
         NatsDemo.awaitSubscriber(url, "hdr.ev")
-        conn.publishWithHeaders("hdr.ev",
+        conn.publish("hdr.ev",
           Seq("Trace-Id" -> "trace-1", "Source" -> "ingest-7"), "1,apple".getBytes)
         conn.publish("hdr.ev", "2,banana".getBytes)
-        conn.publishWithHeaders("hdr.ev",
+        conn.publish("hdr.ev",
           Seq("Trace-Id" -> "trace-3"), "3,orange".getBytes)
         q.processAllAvailable()
       } finally {

@@ -40,7 +40,7 @@ class NatsDeadLetterSpec extends AnyFunSuite with BeforeAndAfterAll {
     val url = freshBus()
     val conn = NatsTransport.connect(url)
     val dead = new LinkedBlockingQueue[(Seq[(String, String)], String)]()
-    val dlSub = conn.subscribeHeadersEach("quarantine.ev") { (_, headers, payload) =>
+    val dlSub = conn.subscribe("quarantine.ev", None) { (_, headers, payload) =>
       dead.put((headers, new String(payload))); ()
     }
     val q = spark.readStream.format("nats").schema(schema)
@@ -75,7 +75,7 @@ class NatsDeadLetterSpec extends AnyFunSuite with BeforeAndAfterAll {
     val url = freshBus() + "?retain=100"
     val conn = NatsTransport.connect(url)
     val dead = new LinkedBlockingQueue[(Seq[(String, String)], String)]()
-    val dlSub = conn.subscribeHeadersEach("quarantine.hist") { (_, headers, payload) =>
+    val dlSub = conn.subscribe("quarantine.hist", None) { (_, headers, payload) =>
       dead.put((headers, new String(payload))); ()
     }
     try {
@@ -113,7 +113,7 @@ class NatsDeadLetterSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       val conn = NatsTransport.connect(server.url)
       val dead = new LinkedBlockingQueue[(Seq[(String, String)], String)]()
-      val dlSub = conn.subscribeHeadersEach("dl.wire") { (_, headers, payload) =>
+      val dlSub = conn.subscribe("dl.wire", None) { (_, headers, payload) =>
         dead.put((headers, new String(payload))); ()
       }
       try {

@@ -100,7 +100,7 @@ class NatsMetadataSpec extends AnyFunSuite with BeforeAndAfterAll {
       .writeStream.format("memory").queryName("meta_headers").start()
     try {
       NatsDemo.awaitSubscriber(url, "h")
-      conn.publishWithHeaders("h",
+      conn.publish("h",
         Seq("Trace-Id" -> "abc123", "Source" -> "ingest-7"), "1,x".getBytes)
       conn.publish("h", "2,y".getBytes)
       q.processAllAvailable()
@@ -125,7 +125,7 @@ class NatsMetadataSpec extends AnyFunSuite with BeforeAndAfterAll {
         val dl = System.currentTimeMillis() + 10000
         while (server.subscriptionCount("wire.h") == 0 && System.currentTimeMillis() < dl)
           Thread.sleep(20)
-        conn.publishWithHeaders("wire.h", Seq("K" -> "v1", "K2" -> "v 2"), "1,x".getBytes)
+        conn.publish("wire.h", Seq("K" -> "v1", "K2" -> "v 2"), "1,x".getBytes)
         conn.publish("wire.h", "2,y".getBytes)
         q.processAllAvailable()
         val rows = spark.sql("SELECT id, _headers FROM meta_headers_wire ORDER BY id")
@@ -230,7 +230,7 @@ class NatsMetadataSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("wire transport: envelope survives replay over real TCP sockets with broker sequences") {
     // Same contract as the memory-bus replay test above, spoken over the
-    // JetStream-style retention protocol against MiniNatsServer: _seq must
+    // JetStream API against MiniNatsServer: _seq must
     // be the server-side sequence, stable across startSequence re-reads.
     val server = new MiniNatsServer(retainCapacity = 100)
     try {
@@ -255,60 +255,6 @@ class NatsMetadataSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally server.stop()
   }
 
-  test("_headers under replay: retained on the memory bus, real JetStream, AND the graft wire FETCH") {
-    // memory bus: the ring stores headers like a real JetStream stream
-    val url = freshBus() + "?retain=50"
-    val conn = NatsTransport.connect(url)
-    try {
-      conn.publishWithHeaders("aud", Seq("Trace-Id" -> "t1"), "1,a".getBytes)
-      conn.publish("aud", "2,b".getBytes)
-      val rows = spark.read.format("nats").schema(schema)
-        .option("url", url).option("subject", "aud").option("replay", "true")
-        .option("startSequence", "0")
-        .load()
-        .select(col("id"), col("_headers"))
-        .collect().map(r => (r.getInt(0), r.getMap[String, String](1).toMap)).sortBy(_._1).toSeq
-      assert(rows === Seq((1, Map("Trace-Id" -> "t1")), (2, Map.empty[String, String])))
-    } finally conn.close()
-
-    // real JetStream: the $JS.API pull delivers retained headers as HMSG
-    val js = new MiniNatsServer(retainCapacity = 50, jetStream = true)
-    try {
-      val c2 = NatsTransport.connect(js.url)
-      try {
-        c2.publishWithHeaders("js.aud", Seq("Trace-Id" -> "t2"), "1,a".getBytes)
-        c2.publish("js.aud", "2,b".getBytes)
-        val rows = spark.read.format("nats").schema(schema)
-          .option("url", js.url).option("subject", "js.aud").option("replay", "true")
-          .option("startSequence", "0")
-          .load()
-          .select(col("id"), col("_headers"))
-          .collect().map(r => (r.getInt(0), r.getMap[String, String](1).toMap)).sortBy(_._1).toSeq
-        assert(rows === Seq((1, Map("Trace-Id" -> "t2")), (2, Map.empty[String, String])))
-      } finally c2.close()
-    } finally js.stop()
-
-    // graft wire FETCH: replies arrive as HMSG carrying the ring's
-    // retained header block (VERDICT r12 gap #2 closed) — a dead-letter
-    // audit replaying its quarantine subject sees the same error/envelope
-    // headers live delivery carried. Headerless messages stay empty.
-    val gw = new MiniNatsServer(retainCapacity = 50)
-    try {
-      val c3 = NatsTransport.connect(gw.url)
-      try {
-        c3.publishWithHeaders("gw.aud", Seq("Trace-Id" -> "t3"), "1,a".getBytes)
-        c3.publish("gw.aud", "2,b".getBytes)
-        val rows = spark.read.format("nats").schema(schema)
-          .option("url", gw.url).option("subject", "gw.aud").option("replay", "true")
-          .option("startSequence", "0")
-          .load()
-          .select(col("id"), col("_headers"))
-          .collect().map(r => (r.getInt(0), r.getMap[String, String](1).toMap)).sortBy(_._1).toSeq
-        assert(rows === Seq((1, Map("Trace-Id" -> "t3")), (2, Map.empty[String, String])))
-      } finally c3.close()
-    } finally gw.stop()
-  }
-
   test("_headers survives hostile values: control chars sanitized, duplicate keys last-wins, UTF-8 kept") {
     val url = freshBus()
     val conn = NatsTransport.connect(url)
@@ -321,7 +267,7 @@ class NatsMetadataSpec extends AnyFunSuite with BeforeAndAfterAll {
       // a foreign client can put any byte in a header value — the
       // envelope framing (NUL/SOH/STX) must survive, skip-and-continue
       // intact; duplicate keys are legal NATS, Spark maps need one
-      conn.publishWithHeaders("hostile",
+      conn.publish("hostile",
         Seq("K" -> "a\u0000b\u0001c\u0002d", "K" -> "wins", "Naïve" -> "café"),
         "1,x".getBytes)
       q.processAllAvailable()

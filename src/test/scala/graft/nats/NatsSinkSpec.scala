@@ -77,13 +77,12 @@ class NatsSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("pipelined publish over TCP: batched frames keep order, payload bytes, and headers") {
     // The sink buffers publishBatchRows rows and ships them as one
-    // PUB/HPUB pipeline + one flush (TcpNatsClient.publishBatchWithHeaders).
+    // PUB/HPUB pipeline + one flush (TcpNatsClient.publishBatch).
     // 10 rows with publishBatchRows=4 exercises two full runs + the
-    // commit-time flush of the remainder. jetStream mode: the $JS.API
-    // fetch carries headers back out (the graft FETCH framing is
-    // payload-only — documented gap).
+    // commit-time flush of the remainder; the JetStream fetch carries
+    // the headers back out.
     import spark.implicits._
-    val server = new MiniNatsServer(retainCapacity = 64, jetStream = true)
+    val server = new MiniNatsServer(retainCapacity = 64)
     try {
       (1 to 10).map(i => (i, s"name$i", s"id$i")).toDF("id", "name", "mid")
         .coalesce(1) // one writer task: retention order = row order

@@ -478,5 +478,24 @@ class NatsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.read.format("nats").schema(schema)
         .option("url", "memory://x").load().collect()
     }
+    // out-of-range numbers fail naming the option, not with a bare
+    // "requirement failed" / NumberFormatException
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty else String.valueOf(t.getMessage) +: messages(t.getCause)
+    Seq("batchSize" -> "0", "maxBufferSize" -> "-1").foreach { case (k, v) =>
+      val e = intercept[Exception] {
+        spark.read.format("nats").schema(schema)
+          .option("url", "memory://x").option("subject", "s").option(k, v).load().collect()
+      }
+      assert(messages(e).exists(_.contains(s"'$k' must be >= 1")), messages(e))
+    }
+    Seq("abc", "0").foreach { n =>
+      val e = intercept[Exception] {
+        spark.read.format("nats").schema(schema)
+          .option("url", s"memory://x-retain-$n?retain=$n").option("subject", "s")
+          .option("replay", "true").load().collect()
+      }
+      assert(messages(e).exists(_.contains("retain must be a positive integer")), messages(e))
+    }
   }
 }

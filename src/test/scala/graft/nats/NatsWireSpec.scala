@@ -111,8 +111,8 @@ class NatsWireSpec extends AnyFunSuite with BeforeAndAfterAll {
         val s1 = c1.subscribe("orders.*")(_ => star.incrementAndGet())
         // queue group spanning two distinct client connections — the
         // server, not any client, picks one member per message
-        val s2 = c1.subscribeQueue("orders.us", "work")(_ => qa.incrementAndGet())
-        val s3 = c2.subscribeQueue("orders.us", "work")(_ => qb.incrementAndGet())
+        val s2 = c1.subscribe("orders.us", Some("work"))((_, _, _) => qa.incrementAndGet())
+        val s3 = c2.subscribe("orders.us", Some("work"))((_, _, _) => qb.incrementAndGet())
         eventually()(server.subscriptionCount("orders.us") == 3)
         (1 to 10).foreach(i => pub.publish("orders.us", s"m$i".getBytes))
         eventually()(star.get == 10 && qa.get + qb.get == 10)
@@ -349,12 +349,12 @@ class NatsWireSpec extends AnyFunSuite with BeforeAndAfterAll {
       try {
         val got = new java.util.concurrent.LinkedBlockingQueue[
           (Seq[(String, String)], String)]()
-        val sub = con.subscribeHeadersEach("hdr.t") { (_, headers, payload) =>
+        val sub = con.subscribe("hdr.t", None) { (_, headers, payload) =>
           got.put((headers, new String(payload))); ()
         }
         try {
           eventually()(server.subscriptionCount("hdr.t") == 1)
-          pub.publishWithHeaders("hdr.t",
+          pub.publish("hdr.t",
             Seq("Nats-Msg-Id" -> "m-1", "X-Colon-Value" -> "a:b:c"),
             "body,with\r\nCRLF".getBytes)
           val (hdrs, body) = got.poll(10, java.util.concurrent.TimeUnit.SECONDS)
@@ -379,7 +379,7 @@ class NatsWireSpec extends AnyFunSuite with BeforeAndAfterAll {
         val sub = con.subscribe("hdr.plain")(p => { got.put(new String(p)); () })
         try {
           eventually()(server.subscriptionCount("hdr.plain") == 1)
-          pub.publishWithHeaders("hdr.plain", Seq("K" -> "v"), "payload".getBytes)
+          pub.publish("hdr.plain", Seq("K" -> "v"), "payload".getBytes)
           assert(got.poll(10, java.util.concurrent.TimeUnit.SECONDS) === "payload")
         } finally sub.close()
       } finally { pub.close(); con.close() }
@@ -390,7 +390,7 @@ class NatsWireSpec extends AnyFunSuite with BeforeAndAfterAll {
     // JetStream message deduplication (docs.nats.io): same Nats-Msg-Id
     // within the window -> stored once. Dedup is a STREAM-INGEST property;
     // core-NATS push delivery still carries every publish.
-    val server = new MiniNatsServer(retainCapacity = 64, jetStream = true)
+    val server = new MiniNatsServer(retainCapacity = 64)
     try {
       val pub = NatsTransport.connect(server.url)
       val con = NatsTransport.connect(server.url)
@@ -399,9 +399,9 @@ class NatsWireSpec extends AnyFunSuite with BeforeAndAfterAll {
         val sub = con.subscribe("dedup.t")(p => { got.put(new String(p)); () })
         try {
           eventually()(server.subscriptionCount("dedup.t") == 1)
-          pub.publishWithHeaders("dedup.t", Seq("Nats-Msg-Id" -> "a"), "one".getBytes)
-          pub.publishWithHeaders("dedup.t", Seq("Nats-Msg-Id" -> "a"), "one-retry".getBytes)
-          pub.publishWithHeaders("dedup.t", Seq("Nats-Msg-Id" -> "b"), "two".getBytes)
+          pub.publish("dedup.t", Seq("Nats-Msg-Id" -> "a"), "one".getBytes)
+          pub.publish("dedup.t", Seq("Nats-Msg-Id" -> "a"), "one-retry".getBytes)
+          pub.publish("dedup.t", Seq("Nats-Msg-Id" -> "b"), "two".getBytes)
           pub.publish("dedup.t", "plain".getBytes) // headerless: never deduped
           val live = (1 to 4).map(_ =>
             got.poll(10, java.util.concurrent.TimeUnit.SECONDS)).toSet
@@ -504,7 +504,7 @@ class NatsWireSpec extends AnyFunSuite with BeforeAndAfterAll {
       // while an exception here triggers Spark task retry and the
       // Nats-Msg-Id stream dedup (q120) makes that retry exactly-once.
       val e = intercept[IOException] {
-        client.publishBatchWithHeaders("fb.data",
+        client.publishBatch("fb.data",
           Iterator((Nil, "x".getBytes("UTF-8"))))
       }
       assert(e.getMessage != null)
