@@ -1,6 +1,13 @@
 package graft
 
+import java.io.{File, IOException}
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.BasicFileAttributes
+import java.util.Locale
+import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types._
 
 /** Loaders for the driver-generated parquet fixtures (TESTDATA.md).
   *
@@ -25,10 +32,18 @@ object Tables {
     * "what's wrong" #1: the unconditional nanos rewrite crashed 24
     * queries when the fixture became µs).
     */
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    loadWithBytes(spark, dir, name)._1
+
+  /** [[load]] plus the input's data-file bytes, from the same file walk. */
+  private def loadWithBytes(spark: SparkSession, dir: String, name: String): (DataFrame, Long) = {
+    val path = s"$dir/$name.parquet"
+    val leaves = leafFiles(new File(path))
+    (normalize(spark, name, read(spark, path, leaves)), leaves.filter(_.data).map(_.size).sum)
+  }
+
+  private def normalize(spark: SparkSession, name: String, df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types._
-    val df = spark.read.parquet(s"$dir/$name.parquet")
     if (name == "events") {
       // The NTZ->LTZ cast below is instant-correct ONLY under a UTC
       // session (wall-clock == instant). Every entry point pins
@@ -98,26 +113,74 @@ object Tables {
     "part" -> Seq("p_partkey"),
     "supplier" -> Seq("s_suppkey"))
 
-  /** Total bytes of data files under `f` (a single parquet file OR a
-    * Spark-written directory of part files). The round-21 gate tested
-    * `f.isFile` only, so a directory-shaped input of the same data was
-    * never spread and its plan diverged from the single-file fixture's
-    * (the 4 red ScaleStressSpec plan pins, VERDICT r21 item 1) — the
-    * gate must see the same total bytes for both shapes. */
-  private def leafBytes(f: java.io.File): Long =
-    if (f.isFile) f.length()
-    else if (f.isDirectory)
-      f.listFiles() match {
-        case null => 0L
-        case kids => kids.filter(k => !k.getName.startsWith(".") &&
-          !k.getName.startsWith("_")).map(leafBytes).sum
+  /** One file under a fixture path: its path relative to the fixture
+    * root, length and mtime. `data` is false for hidden and metadata files
+    * (`.`/`_` prefixes) and everything under them. */
+  private final case class Leaf(rel: String, size: Long, mtimeNanos: Long, data: Boolean)
+
+  /** Every file under `f` (a single parquet file OR a Spark-written
+    * directory of part files), one stat each, in name order. The list is
+    * both the schema cache's file signature and the spread gate's byte
+    * count: the gate sums the `data` leaves, so a directory-shaped input
+    * sees the same total bytes as the single-file fixture of the same
+    * data (a gate that counted single files only never spread the
+    * directory shape, and its plan diverged; ScaleStressSpec pins both).
+    * Empty when `f` is not a local file or directory. */
+  private def leafFiles(f: File, rel: String = "", data: Boolean = true): Seq[Leaf] =
+    f.listFiles() match {
+      case null =>
+        try {
+          val a = Files.readAttributes(f.toPath, classOf[BasicFileAttributes])
+          if (a.isRegularFile)
+            Seq(Leaf(rel, a.size, a.lastModifiedTime.to(TimeUnit.NANOSECONDS), data))
+          else Seq.empty
+        } catch { case _: IOException => Seq.empty }
+      case kids => kids.sortBy(_.getName).toSeq.flatMap { k =>
+        val n = k.getName
+        leafFiles(k, s"$rel/$n", data && !n.startsWith(".") && !n.startsWith("_"))
       }
-    else 0L
+    }
+
+  /** A path's inferred schema, valid while its files and the session's
+    * parquet-inference settings are what they were at inference. */
+  private final case class SchemaEntry(
+      leaves: Seq[Leaf], parquetConf: Seq[(String, String)], schema: StructType)
+
+  /** Inferred fixture schemas per session (held weakly: a dropped
+    * session's entries go with it), one entry per resolved path. Without
+    * it every load pays Spark's footer-inference job before the query
+    * starts; with it only a path's first load in a session does, and a
+    * rewritten file or a changed parquet setting infers again and
+    * replaces the entry. Schemas only: no DataFrame, no data. */
+  private val schemas = new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, SchemaEntry]]()
+
+  private def read(spark: SparkSession, path: String, leaves: Seq[Leaf]): DataFrame =
+    if (leaves.isEmpty) spark.read.parquet(path) // not local: no signature to key on
+    else {
+      val conf = spark.conf.getAll.toSeq
+        .filter(_._1.toLowerCase(Locale.ROOT).contains("parquet")).sorted
+      val entries = schemas.synchronized(
+        schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap[String, SchemaEntry]()))
+      val key = Paths.get(path).toAbsolutePath.normalize.toString
+      Option(entries.get(key)).filter(e => e.leaves == leaves && e.parquetConf == conf) match {
+        case Some(e) => spark.read.schema(e.schema).parquet(path)
+        case None =>
+          val df = spark.read.parquet(path)
+          entries.put(key, SchemaEntry(leaves, conf, df.schema))
+          df
+      }
+    }
+
+  /** Cached schema entries of `spark`'s session (for specs). */
+  private[graft] def cachedSchemas(spark: SparkSession): Int =
+    schemas.synchronized(Option(schemas.get(spark)).fold(0)(_.size))
+
+  /** Sessions that still hold cached schemas (for specs). */
+  private[graft] def cachedSessions: Int = schemas.synchronized(schemas.size)
 
   def loadSpread(spark: SparkSession, dir: String, name: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val df = load(spark, dir, name)
-    val bytes = leafBytes(new java.io.File(s"$dir/$name.parquet"))
+    val (df, bytes) = loadWithBytes(spark, dir, name)
     if (bytes > 0 && bytes <= SpreadMaxBytes)
       spreadKeys.get(name) match {
         case Some(ks) => df.repartition(

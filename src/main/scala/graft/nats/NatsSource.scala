@@ -791,10 +791,8 @@ final class NatsBatch(
       case r: ReplayableNatsConnection =>
         require(!opts.subject.exists(c => c == '*' || c == '>'),
           s"replay requires a literal subject, got '${opts.subject}'")
-        val after =
-          if (opts.startSequence >= 0) opts.startSequence
-          else r.earliestRetained(opts.subject) - 1
-        val current = r.currentSeq(opts.subject)
+        val (earliest, current) = r.retainedWindow(opts.subject)
+        val after = if (opts.startSequence >= 0) opts.startSequence else earliest - 1
         NatsReplayPartition.slice(after, current - after, fullSchema, required, filters, opts)
       case _ =>
         throw new UnsupportedOperationException(
@@ -1125,11 +1123,12 @@ final class NatsMicroBatchStream(
     * Fail fast when that position was already evicted — silent loss is
     * exactly what replay mode exists to prevent. */
   private def resolveReplayStart(r: ReplayableNatsConnection): Long = {
+    val (earliest, current) = r.retainedWindow(opts.subject)
     if (replayStart < 0) {
       replayStart =
         if (restoredOffset > 0) restoredOffset // checkpoint resume
         else if (opts.startSequence >= 0) opts.startSequence
-        else r.currentSeq(opts.subject) // default: latest-at-start
+        else current // default: latest-at-start
     }
     // Spark calls initialOffset on restart too — BEFORE the offset log is
     // replayed through deserializeOffset — so a checkpoint restored after
@@ -1139,7 +1138,6 @@ final class NatsMicroBatchStream(
     admitted = math.max(admitted, replayStart)
     // The NEXT row to fetch (not the historical start: that falls out of
     // the ring on any long-running query) must still be retained.
-    val earliest = r.earliestRetained(opts.subject)
     if (admitted + 1 < earliest)
       throw new IllegalStateException(
         s"start sequence ${admitted + 1} on '${opts.subject}' is beyond the " +

@@ -66,12 +66,17 @@ trait NatsSubscription extends AutoCloseable
   * fire-and-forget against a vanilla core-NATS broker.
   */
 trait ReplayableNatsConnection extends NatsConnection {
-  /** Highest sequence ever published on the literal subject; 0 if none. */
-  def currentSeq(subject: String): Long
+  /** Both ends of the literal subject's retained window, read together
+    * (one broker round trip on JetStream): the oldest sequence still
+    * retained (1 if nothing evicted; current+1 once everything aged out)
+    * and the highest sequence ever published (0 if none). */
+  def retainedWindow(subject: String): (Long, Long)
 
-  /** Oldest sequence still retained on the subject (1 if nothing evicted;
-    * currentSeq+1 once everything aged out). */
-  def earliestRetained(subject: String): Long
+  /** Highest sequence ever published on the literal subject; 0 if none. */
+  final def currentSeq(subject: String): Long = retainedWindow(subject)._2
+
+  /** Oldest sequence still retained on the subject. */
+  final def earliestRetained(subject: String): Long = retainedWindow(subject)._1
 
   /** Stateful sequential fetch starting after `afterSeq`: each
     * `next(max)` returns the following chunk in order, with each
@@ -338,9 +343,7 @@ object InMemoryBus {
     }
     private val bus = buses.computeIfAbsent(id, _ => new Bus(retain))
 
-    def currentSeq(subject: String): Long = bus.retainedFor(subject).bounds._2
-
-    def earliestRetained(subject: String): Long = bus.retainedFor(subject).bounds._1
+    def retainedWindow(subject: String): (Long, Long) = bus.retainedFor(subject).bounds
 
     def openRangeFetch(subject: String, afterSeq: Long): RangeFetch = {
       val r = bus.retainedFor(subject)

@@ -675,11 +675,11 @@ private[nats] final class JetStreamTcpConnection(c: TcpNatsClient)
       validatedStreams.add(name)
     }
 
-  /** (first_seq, last_seq) of the stream's state; (1, 0) when no stream
-    * covers the subject yet. A virgin real-JetStream stream reports
-    * first_seq 0 — clamped to 1 to honor the trait's "1 if nothing
-    * evicted" contract. */
-  private def state(subject: String): (Long, Long) =
+  /** (first_seq, last_seq) of the stream's state from one STREAM.INFO;
+    * (1, 0) when no stream covers the subject yet. A virgin
+    * real-JetStream stream reports first_seq 0 — clamped to 1 to honor
+    * the trait's "1 if nothing evicted" contract. */
+  def retainedWindow(subject: String): (Long, Long) =
     streamFor(subject) match {
       case None => (1L, 0L)
       case Some(name) =>
@@ -691,9 +691,6 @@ private[nats] final class JetStreamTcpConnection(c: TcpNatsClient)
         (math.max(1L, NatsWire.jsonLongField(body, "first_seq").getOrElse(1L)),
           NatsWire.jsonLongField(body, "last_seq").getOrElse(0L))
     }
-
-  def currentSeq(subject: String): Long = state(subject)._2
-  def earliestRetained(subject: String): Long = state(subject)._1
 
   /** One ephemeral pull consumer serves the WHOLE range: chunked readers
     * (NatsReplayReader pulls batchSize at a time) cost one
@@ -711,7 +708,7 @@ private[nats] final class JetStreamTcpConnection(c: TcpNatsClient)
 
     private def ensureConsumer(): Boolean = {
       if (consumer != null) return true
-      val (first, l) = state(subject)
+      val (first, l) = retainedWindow(subject)
       last = l
       if (cursor + 1 > last) return false // nothing retained past cursor
       if (cursor + 1 < first)
@@ -854,6 +851,12 @@ final class MiniNatsServer(
     * per chunk). */
   def consumersCreated: Long = nextEphemeral.get() - 1
 
+  private val streamInfos = new AtomicLong(0)
+
+  /** `$JS.API.STREAM.INFO` requests answered so far (observability for
+    * specs: each is one client round trip for a retained window). */
+  def streamInfoRequests: Long = streamInfos.get()
+
   private def jsApi(subject: String, reply: String, payload: Array[Byte]): Unit = {
     if (reply == null) return // request-reply only
     def respond(s: String): Unit = route(reply, s.getBytes(US_ASCII))
@@ -870,6 +873,7 @@ final class MiniNatsServer(
       val arr = if (names.isEmpty) "null" else names.map(jsonStr).mkString("[", ",", "]")
       respond(s"""{"type":"io.nats.jetstream.api.v1.stream_names_response","total":${names.size},"offset":0,"limit":1024,"streams":$arr}""")
     } else if (subject.startsWith("$JS.API.STREAM.INFO.")) {
+      streamInfos.incrementAndGet()
       val name = subject.stripPrefix("$JS.API.STREAM.INFO.")
       val subj = jsSubjects.get(name)
       if (subj == null) { notFound("stream", 10059); return }

@@ -53,14 +53,17 @@ object SchemaInference {
     val conn = NatsTransport.connect(url, tls)
     try {
       val literal = !subject.exists(c => c == '*' || c == '>')
-      conn match {
-        case r: ReplayableNatsConnection if literal && r.currentSeq(subject) > 0 =>
-          val current = r.currentSeq(subject)
-          val after = math.max(r.earliestRetained(subject) - 1, current - n)
+      val retained = conn match {
+        case r: ReplayableNatsConnection if literal => Some((r, r.retainedWindow(subject)))
+        case _ => None
+      }
+      retained match {
+        case Some((r, (earliest, current))) if current > 0 =>
+          val after = math.max(earliest - 1, current - n)
           r.fetchRetained(subject, after, n).map(new String(_, UTF_8)).toSeq
-        case c =>
+        case _ =>
           val q = new java.util.concurrent.LinkedBlockingQueue[String]()
-          val sub = c.subscribe(subject)(p => { q.add(new String(p, UTF_8)); () })
+          val sub = conn.subscribe(subject)(p => { q.add(new String(p, UTF_8)); () })
           try {
             val out = scala.collection.mutable.ArrayBuffer.empty[String]
             val deadline = System.nanoTime() + timeoutMs * 1000000L

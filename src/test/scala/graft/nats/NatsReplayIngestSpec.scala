@@ -126,25 +126,6 @@ class NatsReplayIngestSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally conn.close()
   }
 
-  test("executor-side fetch works over real TCP sockets (wire retention protocol)") {
-    val server = new MiniNatsServer(retainCapacity = 500)
-    try {
-      val conn = NatsTransport.connect(server.url)
-      try {
-        (1 to 30).foreach(i => conn.publish("wire.fan", s"$i,row$i".getBytes))
-        val before = NatsMetrics.replayReaderConnections.sum()
-        val rows = spark.read.format("nats").schema(schema)
-          .option("url", server.url).option("subject", "wire.fan")
-          .option("replay", "true").option("startSequence", "0")
-          .option("numPartitions", "3").option("batchSize", "4")
-          .load()
-          .collect().map(_.getInt(0)).sorted.toSeq
-        assert(rows === (1 to 30))
-        assert(NatsMetrics.replayReaderConnections.sum() - before === 3L)
-      } finally conn.close()
-    } finally server.stop()
-  }
-
   test("malformedRows propagates per-query through DSv2 custom task metrics") {
     val url = freshBus(retain = 100)
     val conn = NatsTransport.connect(url)

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.util.UUID
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.streaming.StreamingQueryException
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
@@ -514,6 +515,30 @@ class NatsReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(df.collect().map(_.getInt(0)).sorted.toSeq === (1 to 30))
         assert(NatsMetrics.replayReaderConnections.sum() - before === 3L,
           "one JetStream fetch connection per partition, executor-side")
+      } finally conn.close()
+    } finally server.stop()
+  }
+
+  test("JetStream batch replay plans from ONE STREAM.INFO: both window ends in one round trip") {
+    // Without startSequence the plan needs both ends of the retained
+    // window (earliest for the start, current for the end); asking for
+    // them one at a time costs a broker round trip each.
+    val server = new MiniNatsServer(retainCapacity = 100)
+    try {
+      val conn = NatsTransport.connect(server.url)
+      try {
+        (1 to 12).foreach(i => conn.publish("js.win", s"$i,row$i".getBytes))
+        val df = spark.read.format("nats").schema(schema)
+          .option("url", server.url).option("subject", "js.win")
+          .option("replay", "true").option("numPartitions", "2")
+          .load()
+        val scans = df.queryExecution.optimizedPlan.collect { case r: DataSourceV2ScanRelation => r.scan }
+        assert(scans.size === 1)
+        val before = server.streamInfoRequests
+        assert(scans.head.toBatch.planInputPartitions().length === 2)
+        assert(server.streamInfoRequests - before === 1L,
+          "planning a replay read must fetch the stream state once")
+        assert(df.collect().map(_.getInt(0)).sorted.toSeq === (1 to 12))
       } finally conn.close()
     } finally server.stop()
   }

@@ -9,10 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Payload-driven schema inference (`option("inferSchema", "true")`) —
   * the feature the reference advertises (README.md:9) but left TODO
-  * (README.md:17). Covers the sampling paths (retention, live over real
-  * TCP, live over a wildcard family), both codecs' type rules and
-  * unification, every defined failure mode, and the full DSv2 path:
-  * `spark.read.format("nats")` with NO `.schema(...)`.
+  * (README.md:17). Covers the live sampling paths (over real TCP, over
+  * a wildcard family), both codecs' type rules and unification, every
+  * defined failure mode, and the full DSv2 path:
+  * `spark.read.format("nats")` with NO `.schema(...)`. Retention
+  * sampling runs on every backend in NatsReplaySpec's contract.
   */
 class SchemaInferenceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -122,15 +123,6 @@ class SchemaInferenceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // ---- sampling paths ------------------------------------------------------
 
-  test("retention sampling: literal subject on the bus reads the NEWEST n, no waiting") {
-    val url = freshBus()
-    // 20 retained; n=4 must pick the newest 4 (oldest may age out of any
-    // real retention window first — newest is the representative sample).
-    publish(url, "retained", (1 to 20).map(i => s"$i,row$i"))
-    val sampled = SchemaInference.sample(url, "retained", 4, timeoutMs = 1)
-    assert(sampled === Seq("17,row17", "18,row18", "19,row19", "20,row20"))
-  }
-
   test("live sampling over nats:// TCP (no retention on core NATS)") {
     val server = new MiniNatsServer()
     try {
@@ -224,13 +216,6 @@ class SchemaInferenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       .load()
     assert(df.count() === 2) // none skipped as malformed
     assert(NatsMetrics.malformedCount(url, "infer_self") === 0)
-  }
-
-  test("retention sampling survives eviction: only the still-retained window is read") {
-    val url = freshBus() + "?retain=4"
-    publish(url, "evicted", (1 to 10).map(i => s"$i,row$i")) // 1-6 evicted
-    val sampled = SchemaInference.sample(url, "evicted", 10, timeoutMs = 1)
-    assert(sampled === Seq("7,row7", "8,row8", "9,row9", "10,row10"))
   }
 
   test("inferSamples bounds the sample size through the DSv2 option") {
