@@ -550,7 +550,11 @@ final class NatsScan(
     s"NatsScan(subject=${opts.subject}$f$l)"
   }
 
-  override def toBatch: Batch = new NatsBatch(fullSchema, required, filters, limit, opts)
+  // One batch per scan: `QueryExecution.executedPlan` plans a clone of the
+  // physical plan, whose BatchScanExec asks the scan for its batch and
+  // partitions again; a fresh batch would fetch the replay window twice.
+  private lazy val batch = new NatsBatch(fullSchema, required, filters, limit, opts)
+  override def toBatch: Batch = batch
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new NatsMicroBatchStream(fullSchema, required, filters, opts)
@@ -756,7 +760,9 @@ final class NatsBatch(
     limit: Option[Int],
     opts: NatsOptions) extends Batch {
 
-  override def planInputPartitions(): Array[InputPartition] =
+  override def planInputPartitions(): Array[InputPartition] = partitions
+
+  private lazy val partitions: Array[InputPartition] =
     if (opts.replay) replayPartitions()
     else {
       // One partition: a one-shot subscription is inherently a single

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.util.UUID
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.streaming.StreamingQueryException
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
@@ -532,10 +532,12 @@ class NatsReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
           .option("url", server.url).option("subject", "js.win")
           .option("replay", "true").option("numPartitions", "2")
           .load()
-        val scans = df.queryExecution.optimizedPlan.collect { case r: DataSourceV2ScanRelation => r.scan }
-        assert(scans.size === 1)
+        // executedPlan plans the scan and then a clone of the physical plan;
+        // both copies must share one batch and its one window fetch.
         val before = server.streamInfoRequests
-        assert(scans.head.toBatch.planInputPartitions().length === 2)
+        val scans = df.queryExecution.executedPlan.collect { case s: BatchScanExec => s }
+        assert(scans.size === 1)
+        assert(scans.head.inputPartitions.length === 2)
         assert(server.streamInfoRequests - before === 1L,
           "planning a replay read must fetch the stream state once")
         assert(df.collect().map(_.getInt(0)).sorted.toSeq === (1 to 12))
