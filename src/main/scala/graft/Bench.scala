@@ -1,11 +1,11 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import java.nio.file.{Files, Paths}
 
 /** Driver-run benchmark: times every benchable SparkEntry query on
   * `SPARK_GRAFT_SF_DIR` and emits ONE JSON line.
   *
-  * Measurement design (round-1 post-mortem):
+  * Measurement design:
   *   - materialize through the built-in `noop` sink, not `.count()` —
   *     counting lets Catalyst prune projections/sort payloads/window
   *     columns, understating real work;
@@ -13,16 +13,16 @@ import java.nio.file.{Files, Paths}
   *     codegen caches, parquet footers), then MIN of 3 timed runs —
   *     min, not median: the work per query is deterministic, so the
   *     fastest observation is the least host-load-contaminated one
-  *     (round 4's medians drifted a uniform 1.2-1.4x with background
-  *     load on code-identical queries — VERDICT r4 item 8);
+  *     (medians drifted a uniform 1.2-1.4x with background load on
+  *     code-identical queries);
   *   - a measured empty-job floor (`noop` write of a 1-row in-memory
   *     frame, min of 5) is reported as `"floor_sec"` so per-query
   *     numbers can be read net of the fixed scheduler+sink overhead
   *     (~0.1-0.3 s) without us editing the raw timings;
   *   - JSON is printed AND written to `$BENCH_OUT` (if set) because
   *     sbt's default logger prefixes stdout lines with `[info] `,
-  *     which made round 1's output unparseable (`run/outputStrategy`
-  *     in build.sbt also forces clean stdout).
+  *     which made the output unparseable (`run/outputStrategy` in
+  *     build.sbt also forces clean stdout).
   */
 object Bench {
   private def materialize(df: DataFrame): Unit =
@@ -30,36 +30,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Round 21 (guide §2.2/§2.4, Probe-measured): persisted frames
-      // materialized with AQE disabled kept all `shuffle.partitions`
-      // post-shuffle partitions, so every downstream scan of a cached
-      // 25-row frame ran one near-empty task per partition — q153 alone
-      // spent ~3 s in ~12 such empty 32-task stages. Letting AQE
-      // re-optimize cached-plan materialization (partition coalescing
-      // included) collapses them; coalescing targets
-      // advisoryPartitionSizeInBytes instead of local parallelism
-      // (parallelismFirst=false, the Spark-docs-recommended production
-      // setting), which is scale-adaptive: tiny frames coalesce to one
-      // partition, 100 TB frames to ~64 MB splits. Both flags are
-      // dataset-size-driven, not tuned to this core count.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // Finer coalescing floor (default 1m): with parallelism-first
-      // coalescing the floor IS the target once bytes/parallelism drops
-      // under it, so the 1 MB default collapsed CPU-dense few-MB cached
-      // frames (vector scoring legs) to 1-3 partitions while the real
-      // win is only the kilobyte frames. 64k keeps mid-size frames at
-      // full parallelism and still folds empty partitions; at cluster
-      // scale bytes/parallelism >> both floors, so this changes nothing.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     // Local-iteration aid (mirrors Verify's SPARK_GRAFT_ONLY): restrict
     // the timed set. Unset for the driver, which always times everything.
@@ -78,11 +49,11 @@ object Bench {
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
             -1.0
         }
-      // Cache hygiene (VERDICT r12 "what's wrong" #2): several queries
-      // persist() multi-consumer frames and nothing unpersisted them, so
-      // cached partitions accumulated across the 119-query × 4-pass run
-      // and timings became order- and registry-size-dependent (q117's 4×
-      // "regression" was cache thrash, not code). Dropping the cache
+      // Cache hygiene: several queries persist() multi-consumer frames,
+      // so without this cached partitions accumulated across the
+      // 119-query × 4-pass run and timings became order- and
+      // registry-size-dependent (q117's 4× "regression" was cache
+      // thrash, not code). Dropping the cache
       // AFTER the timing capture keeps each query's own persist cost in
       // its number while making every query start cache-cold.
       spark.catalog.clearCache()
@@ -125,7 +96,7 @@ object Bench {
 
     // A crashing query reports -1.0; keep it out of the total (it would
     // LOWER the sum, masquerading as a speedup) and surface it explicitly
-    // so the driver can tell fast from broken (ADVICE r2).
+    // so a reader of the JSON line can tell fast from broken.
     val failed = med.collect { case (n, v) if v < 0 => n }
     val qs = med.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val total = med.collect { case (_, v) if v >= 0 => v }.sum
@@ -134,8 +105,8 @@ object Bench {
     println(json)
     sys.env.get("BENCH_OUT").foreach(p => Files.writeString(Paths.get(p), json))
     // Always persist the full JSON next to the build: the driver keeps only
-    // the last 2,000 chars of stdout, which truncated away q01-q21 and the
-    // total in round 5 (VERDICT r5 "what's wrong" #2). A committed file
+    // the last 2,000 chars of stdout, which once truncated away q01-q21 and
+    // the total. A committed file
     // survives regardless of how stdout is captured. (Filtered local runs
     // must NOT clobber the committed full artifact.)
     if (only.isEmpty) Files.writeString(Paths.get("BENCH_FULL.json"), json + "\n")

@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
-/** Optimization-round measurement harness (round 21, guide §1): time one
-  * query end-to-end (build + noop materialize, the Bench methodology)
-  * and break the wall clock down per Spark job and per stage, so the
-  * expensive leg of a multi-leg harness entry is identified by
-  * measurement instead of guessing. Never run by the driver.
+/** Measurement harness: time one query end-to-end (build + noop
+  * materialize, the Bench methodology) and break the wall clock down per
+  * Spark job and per stage, so the expensive leg of a multi-leg harness
+  * entry is identified by measurement instead of guessing. Bench and
+  * Verify never run it.
   *
   * Usage: sbt "runMain graft.Probe <name> [repeats]"
   */
@@ -17,19 +16,7 @@ object Probe {
     val name = args(0)
     val repeats = args.drop(1).headOption.map(_.toInt).getOrElse(3)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Mirror Bench's session configs exactly — a probe under different
-      // AQE behavior measures a different plan.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     final case class JobRow(id: Int, t0: Long, var t1: Long = 0L,
         var stages: Int = 0, var tasks: Int = 0, var desc: String = "")

@@ -7,11 +7,11 @@ import org.apache.spark.sql.types._
 
 import graft.nats.{InMemoryBus, MiniNatsServer, NatsTransport}
 
-/** Streaming-ingest benchmark (VERDICT r5 item 2): measures the
-  * publish -> transport -> ledger -> micro-batch -> sink path against the
-  * targets BASELINE.md derives from the reference's BatchBufferConfig
-  * (reference src/batch_buffer.rs:22-28): 1,000 rows per micro-batch and
-  * a <= 1 s partial-batch flush bound.
+/** Streaming-ingest benchmark: measures the publish -> transport ->
+  * ledger -> micro-batch -> sink path against the targets BASELINE.md
+  * derives from the reference's BatchBufferConfig (reference
+  * src/batch_buffer.rs:22-28): 1,000 rows per micro-batch and a <= 1 s
+  * partial-batch flush bound.
   *
   * Run for BOTH transports — the in-process bus and the TCP wire-protocol
   * client against [[MiniNatsServer]] on a real loopback socket — so the
@@ -135,12 +135,7 @@ object StreamBench {
 
   /** Standalone run: `runMain graft.StreamBench [rows]`. */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "8") + "]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     println("{" + section(spark, args.headOption.map(_.toInt).getOrElse(100000)) + "}")
     spark.stop()
   }

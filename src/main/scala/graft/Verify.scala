@@ -1,25 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Same adaptive-execution settings as Bench (round 21): the
-      // correctness gate and the invariance sweep must exercise the
-      // exact plan shapes the bench times.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // Local-iteration aid: SPARK_GRAFT_ONLY=q40,q41 restricts the run.
     // Unset for the driver, which always runs the full surface.
@@ -33,8 +19,8 @@ object Verify {
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    // — a tab or CR in a query's SQL would otherwise make the oracle
+    // side's json.load fail and silently drop every correctness check.
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"

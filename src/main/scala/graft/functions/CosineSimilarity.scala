@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -307,120 +304,4 @@ case class DotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
     copy(left = newLeft, right = newRight)
-}
-
-/** Registration: as a session extension (`.withExtensions(GraftExtensions)`)
-  * or imperatively on a live session. */
-object GraftFunctions {
-
-  private val cosineInfo = new ExpressionInfo(
-    classOf[CosineSimilarity].getName, null, "cosine_similarity",
-    "_FUNC_(a, b) - cosine similarity of two float vectors",
-    "", "", "", "", "", "", "built-in")
-
-  private[functions] val cosineBuilder: Seq[Expression] => Expression = {
-    case Seq(a, b) => CosineSimilarity(a, b)
-    case other => throw new IllegalArgumentException(
-      s"cosine_similarity expects 2 arguments, got ${other.size}")
-  }
-
-  private val dist2Info = new ExpressionInfo(
-    classOf[Dist2].getName, null, "graft_dist2",
-    "_FUNC_(a, b) - squared L2 distance of two double vectors",
-    "", "", "", "", "", "", "built-in")
-
-  private[functions] val dist2Builder: Seq[Expression] => Expression = {
-    case Seq(a, b) => Dist2(a, b)
-    case other => throw new IllegalArgumentException(
-      s"graft_dist2 expects 2 arguments, got ${other.size}")
-  }
-
-  private val dotInfo = new ExpressionInfo(
-    classOf[DotProduct].getName, null, "graft_dot",
-    "_FUNC_(a, b) - dot product of two double vectors",
-    "", "", "", "", "", "", "built-in")
-
-  private[functions] val dotBuilder: Seq[Expression] => Expression = {
-    case Seq(a, b) => DotProduct(a, b)
-    case other => throw new IllegalArgumentException(
-      s"graft_dot expects 2 arguments, got ${other.size}")
-  }
-
-  private def unary(name: String, make: Expression => Expression)
-    : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier(name),
-      new ExpressionInfo(classOf[Sketches.type].getName, null, name),
-      { case Seq(c) => make(c)
-        case other => throw new IllegalArgumentException(
-          s"$name expects 1 argument, got ${other.size}") })
-
-  private val sketchFns = Seq(
-    unary("graft_simhash32", SimHash32),
-    unary("graft_minhash_sig", MinHashSignature),
-    unary("graft_shingle_hashes", ShingleHashes),
-    unary("graft_lsh_buckets", LshBuckets),
-    unary("graft_text_counts", TextCounts),
-    unary("graft_span_hashes", SpanHashes),
-    unary("graft_line_hashes", LineHashes),
-    unary("graft_bigram_hashes", BigramHashes),
-    unary("graft_trigram_hashes", TrigramHashes),
-    unary("graft_char_entropy", CharEntropy),
-    unary("graft_nfc", NfcNormalize),
-    unary("graft_html_text", HtmlText),
-    unary("graft_minhash_agg", (c: Expression) => MinHashAgg(c)),
-    gramHashesFn,
-    bottomKFn)
-
-  private lazy val gramHashesFn
-    : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_gram_hashes"),
-      new ExpressionInfo(classOf[GramHashes].getName, null, "graft_gram_hashes"),
-      { case Seq(t, k) => GramHashes(t, k)
-        case other => throw new IllegalArgumentException(
-          s"graft_gram_hashes expects 2 arguments, got ${other.size}") })
-
-  private lazy val bottomKFn
-    : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_bottomk_distinct"),
-      new ExpressionInfo(classOf[BottomKDistinctAgg].getName, null, "graft_bottomk_distinct"),
-      { case Seq(c, k) => BottomKDistinctAgg(c, k)
-        case other => throw new IllegalArgumentException(
-          s"graft_bottomk_distinct expects 2 arguments, got ${other.size}") })
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("cosine_similarity"), cosineInfo, cosineBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_dist2"), dist2Info, dist2Builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_dot"), dotInfo, dotBuilder)
-    sketchFns.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
-  }
-
-  /** The sketch functions in SparkSessionExtensions.injectFunction form. */
-  private[functions] def injectables
-    : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
-    sketchFns
-}
-
-/** `spark.sql.extensions=graft.functions.GraftExtensions` wiring — the
-  * same function set GraftFunctions.register installs imperatively. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (FunctionIdentifier("cosine_similarity"),
-        new ExpressionInfo(classOf[CosineSimilarity].getName, null, "cosine_similarity"),
-        GraftFunctions.cosineBuilder)) // arity-checked, same as register()
-    ext.injectFunction(
-      (FunctionIdentifier("graft_dist2"),
-        new ExpressionInfo(classOf[Dist2].getName, null, "graft_dist2"),
-        GraftFunctions.dist2Builder))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_dot"),
-        new ExpressionInfo(classOf[DotProduct].getName, null, "graft_dot"),
-        GraftFunctions.dotBuilder))
-    GraftFunctions.injectables.foreach(ext.injectFunction)
-  }
 }

@@ -471,9 +471,7 @@ object Analytics {
     // construction (same left-to-right (x-y)*(x-y) accumulation,
     // SketchParitySpec-pinned), but it runs inside whole-stage codegen
     // instead of per-element lambda interpretation; Probe measured the
-    // fold as the dominant stage of every PQ encode/LUT leg. Callers
-    // must have GraftFunctions.register'd the session (all Kmeans/PQ
-    // entry points do).
+    // fold as the dominant stage of every PQ encode/LUT leg.
     def dist2(v: Column, c: Column): Column =
       call_function("graft_dist2", v, c)
 
@@ -506,9 +504,6 @@ object Analytics {
       * a tested fact).
       */
     def twoRoundAssign(e: DataFrame, k: Int = 8): DataFrame = {
-      // dist2 resolves through the function registry — register here so
-      // every assignment caller is covered regardless of its own entry.
-      graft.functions.GraftFunctions.register(e.sparkSession)
       val c0 = centroidRow(e.filter(col("vec_id") < k)
         .select(col("vec_id").as("cid"), col("v").as("ce")))
       val a1 = e.crossJoin(broadcast(c0))
@@ -1062,7 +1057,6 @@ object Analytics {
          |WHERE NOT EXISTS (SELECT 1 FROM corpus c WHERE c.th = b.th)
          |  AND NOT EXISTS (SELECT 1 FROM band_matched m WHERE m.doc_id = b.doc_id)
          |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val isNew = col("source").isin("src0", "src1")
       // One pass computes both dedup keys; persisted because batch and
       // corpus splits each feed two joins (see q41/q45 note).
@@ -1119,7 +1113,6 @@ object Analytics {
         |WHERE doc_id % 50 <> 0 AND h IN (SELECT h FROM bench)
         |GROUP BY doc_id
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val sh = T(s, dir, "documents")
         .select(col("doc_id"), explode(expr("graft_shingle_hashes(text)")).as("h"))
       // Persisted: feeds both the bloom build and the exact confirm —
@@ -1656,7 +1649,6 @@ object Analytics {
     },
 
     QueryDef("q109_pq_ann", pqAnnOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s) // Kmeans.dist2 → graft_dist2
       // (vec_id, label, m, sub): scan-local subvector slices. Fresh load
       // per use-site keeps self-join lineage unambiguous; the cb/query
       // scans prune to <= PQ_K+1 rows via the pushed vec_id filter.
@@ -1828,7 +1820,6 @@ object Analytics {
         |  CAST(clabel AS BIGINT) AS pred_label, COUNT(*) AS n_vecs
         |FROM pred GROUP BY 1, 2
         |ORDER BY 1, 2""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s) // Kmeans.assign → graft_dist2
       val e = T(s, dir, "embeddings").select(
         col("vec_id"), col("label"),
         transform(col("embedding"), x => x.cast(DoubleType)).as("v"))
@@ -2852,7 +2843,7 @@ object Analytics {
         .select(col("doc_id"), explode(sequence(lit(0L), col("n_chunks") - 1)).as("ci"))
         .select(col("doc_id"))
       val postings = docs.filter(col("text").isNotNull)
-        .select(col("doc_id"), explode(Pipeline.wordFeatCol(s)).as("w"))
+        .select(col("doc_id"), explode(Pipeline.wordFeatCol).as("w"))
         .filter(length(col("w")) > 0)
         .select(col("doc_id"), col("w")).distinct()
         .select(col("doc_id"))
@@ -3305,7 +3296,6 @@ object Analytics {
     * design comment states; ScaleStressSpec runs it at 10×/K=80 and
     * asserts the plan shape survives and runtime stays ~linear). */
   private[graft] def semanticDedupAt(s: SparkSession, dir: String, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = T(s, dir, "embeddings").select(
       col("vec_id"), col("embedding"),
       transform(col("embedding"), x => x.cast(DoubleType)).as("v"))

@@ -806,7 +806,7 @@ object Curation {
       val v2t = base.filter(col("doc_id") % 19 =!= 2)
         .select(col("source"), col("text").as("t"))
       def buckets(df: DataFrame, cn: String): DataFrame = df
-        .select(col("source"), explode(Pipeline.wordFeatColOn(s, col("t"))).as("w"))
+        .select(col("source"), explode(Pipeline.wordFeatColOn(col("t"))).as("w"))
         .filter(length(col("w")) > 0)
         .select(col("source"),
           pmod(conv(substring(md5(col("w")), 1, 15), 16, 10).cast(LongType),
@@ -1320,7 +1320,6 @@ object Curation {
     // this derivation is corpus-proportional — AQE decides, the q199
     // de-hinting rule); per-shard aggregates are the only shuffle. ----
     QueryDef("q212_export_decontam_audit", exportDecontamAuditOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val root = ensureCompactedExport(s, dir)
       val exp = s.read.parquet(root)
         .select(col("shard").cast(LongType).as("shard"), col("doc_id"),

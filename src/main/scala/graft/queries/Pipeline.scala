@@ -83,7 +83,6 @@ object Pipeline {
     * persisted (one corpus scan, q85/q88/q99 rule).
     */
   private[queries] def bigramCePerDoc(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // (Round 22 note: the q122 probe shows the bg cache as ONE
     // partition — serial fill plus serial map sides of the four
     // downstream passes, ~4 x 0.35 s one-task stages — so a
@@ -147,7 +146,6 @@ object Pipeline {
     // pass (graft_text_counts) — the split/filter×5/regexp expression
     // forest this replaces walked the text seven times per row. ----
     QueryDef("q43_text_stats", textStatsOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val counts = T(s, dir, "documents")
         .select(col("lang"), col("n_chars"), expr("graft_text_counts(text)").as("tc"))
         .select(col("lang"), col("n_chars"),
@@ -439,7 +437,6 @@ object Pipeline {
     // the benchmark hash set is small and broadcasts — contamination
     // checking is a map-side filter over the corpus. ----
     QueryDef("q57_decontaminate", decontaminateOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val sh = T(s, dir, "documents")
         .select(col("doc_id"), col("lang"),
           explode(expr("graft_shingle_hashes(text)")).as("h"))
@@ -465,7 +462,6 @@ object Pipeline {
     // Entirely scan-local — two array functions over the shingle-hash
     // kernel, then one small aggregate. ----
     QueryDef("q58_repetition", repetitionOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       T(s, dir, "documents")
         .select(col("lang"), expr("graft_shingle_hashes(text)").as("hs"))
         .filter(col("hs").isNotNull)
@@ -737,7 +733,6 @@ object Pipeline {
     // hash-keyed exchange carries 8-byte longs at ~len/8 per doc, never
     // the text. ----
     QueryDef("q102_dup_spans", dupSpansOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val spans = T(s, dir, "documents")
         .filter(col("text").isNotNull)
         .select(col("doc_id"), col("lang"),
@@ -814,7 +809,6 @@ object Pipeline {
     // log2 per distinct codepoint), then a 5-row per-language rollup —
     // map-side partial aggregation, the cheapest possible 100 TB shape. ----
     QueryDef("q104_char_entropy", charEntropyOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       T(s, dir, "documents")
         .filter(col("text").isNotNull && length(col("text")) > 0)
         .select(col("lang"), expr("graft_char_entropy(text)").as("h"))
@@ -879,7 +873,6 @@ object Pipeline {
     // corpus-heavy step is one distinct over 8-byte (source, hash)
     // pairs; after the k-min cut the whole computation is kilobytes. ----
     QueryDef("q117_source_overlap", sourceOverlapOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       // Per-source bottom-64 DISTINCT hashes via the mergeable KMV
       // aggregate (round 14): the old distinct()->row_number<=64 shape
       // shuffled every (source, hash) pair and its spill behavior made
@@ -1080,7 +1073,6 @@ object Pipeline {
     // AND the train probe -> persisted (one corpus scan); per-doc
     // rollups are keyed on doc_id; output rows = 5 x #langs always. ----
     QueryDef("q123_contamination_score", contaminationScoreOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       // Gram hashes come from the one-pass native kernel (q117's
       // graft_shingle_hashes — SketchParitySpec pins it against the
       // split + md5 + conv SQL formulation the oracle still writes);
@@ -1127,7 +1119,6 @@ object Pipeline {
     // feeds the doc-frequency build, the per-source rollup, and the
     // removal probe -> persisted (one corpus scan). ----
     QueryDef("q124_boilerplate_profile", boilerplateOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       // Line hashes come from the one-pass native kernel (q98's
       // segmentation; SketchParitySpec pins it against the explode +
       // slice + md5 SQL formulation the oracle still writes).
@@ -1180,7 +1171,6 @@ object Pipeline {
     // (#langs+1) x #langs at any corpus size. grams feeds the profile
     // build AND the held-out probe -> persisted (one corpus scan). ----
     QueryDef("q126_lang_id", langIdOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       // Spread loader (round 21): the trigram kernel + the grams cache
       // fill dominated as TWO sequential single-task ~1 s stages on the
       // 1-row-group fixture scan; spreading the scan parallelizes both.
@@ -1238,7 +1228,6 @@ object Pipeline {
     // (benchmarks are tiny by definition); each stage's frame persists
     // once and feeds exactly (next stage + its funnel row). ----
     QueryDef("q149_curation_funnel", curationFunnelOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val d = T(s, dir, "documents")
         .filter(col("text").isNotNull)
         .select(col("doc_id"), col("lang"), col("n_chars"), col("text"),
@@ -1312,7 +1301,7 @@ object Pipeline {
       val words = T(s, dir, "documents")
         .filter(col("text").isNotNull)
         .select(col("doc_id"), col("lang"),
-          explode(wordFeatCol(s)).as("w"))
+          explode(wordFeatCol).as("w"))
         .filter(length(col("w")) > 0)
         .select(col("doc_id"), col("lang"),
           pmod(conv(substring(md5(col("w")), 1, 15), 16, 10).cast(LongType),
@@ -1376,7 +1365,7 @@ object Pipeline {
       val isEval = col("doc_id") % 5 === 0
       val words = d.filter(col("text").isNotNull)
         .select(col("doc_id"), col("lang"),
-          explode(wordFeatCol(s)).as("w"))
+          explode(wordFeatCol).as("w"))
         .filter(length(col("w")) > 0)
         .select(col("doc_id"), col("lang"),
           pmod(conv(substring(md5(col("w")), 1, 15), 16, 10).cast(LongType),
@@ -1442,7 +1431,7 @@ object Pipeline {
       val words = T(s, dir, "documents")
         .filter(col("text").isNotNull)
         .select(col("lang"),
-          explode(wordFeatCol(s)).as("w"))
+          explode(wordFeatCol).as("w"))
         .filter(length(col("w")) > 0)
       val tf = words.groupBy(col("lang"), col("w")).agg(count(lit(1)).as("tf"))
       val f = words.groupBy(col("w")).agg(count(lit(1)).as("f"))
@@ -1613,7 +1602,6 @@ object Pipeline {
         |           % 1000000007) AS BIGINT) AS content_checksum
         |FROM documents WHERE text IS NOT NULL
         |GROUP BY lang ORDER BY lang""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       T(s, dir, "documents")
         .filter(col("text").isNotNull)
         .select(col("lang"), col("text"), expr("graft_nfc(text)").as("norm"))
@@ -1714,7 +1702,6 @@ object Pipeline {
     // one reassembly shuffle is the rewrite's irreducible doc-keyed
     // groupBy (q141's bound). ----
     QueryDef("q164_decontam_rewrite", decontamRewriteOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val d = T(s, dir, "documents")
         .filter(col("text").isNotNull)
         .select(col("doc_id"), col("lang"), col("text"),
@@ -1774,7 +1761,6 @@ object Pipeline {
     // SketchParitySpec pins kernel == regex chain on adversarial
     // fragments beyond the derived corpus. ----
     QueryDef("q174_html_extract", htmlExtractOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       T(s, dir, "documents")
         .filter(col("text").isNotNull)
         .withColumn("html", expr(htmlCaseSql))
@@ -1872,7 +1858,6 @@ object Pipeline {
     * `Curation.ensureCrawlExport`, which writes these rows as real
     * shard files). Returns (doc_id, t, n_tok, n_chr). */
   private[graft] def crawlKeptDocs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // (Round 22 note: the q200 probe shows the funnel's map stage —
     // HTML kernel + PII regex chains + gate — as one 0.8 s task on the
     // single-row-group scan, so a Tables.loadSpread here looked like
@@ -2119,15 +2104,12 @@ object Pipeline {
     * instead of hashing to nothing (the r15 ASCII-only split made
     * domain selection and classification vacuous for exactly the
     * under-represented scripts these operators exist to serve). */
-  private[graft] def wordFeatCol(s: SparkSession): Column =
-    wordFeatColOn(s, col("text"))
+  private[graft] def wordFeatCol: Column = wordFeatColOn(col("text"))
 
   /** Same rule over an arbitrary text column (q206 features the DERIVED
     * snapshot text, not the raw column). */
-  private[graft] def wordFeatColOn(s: SparkSession, c: Column): Column = {
-    graft.functions.GraftFunctions.register(s)
+  private[graft] def wordFeatColOn(c: Column): Column =
     split(call_function("graft_nfc", lower(c)), "[^\\p{L}\\p{N}]+")
-  }
 
   /** DuckDB twin of wordFeatCol's explode: RE2 accepts the same
     * \p{L}\p{N} property classes and nfc_normalize matches graft_nfc
@@ -2925,7 +2907,6 @@ object Pipeline {
 
   /** Returns the dir-qualified bucketed gram-table name. */
   private[graft] def ensureBenchGramTable(s: SparkSession, dir: String): String = synchronized {
-    graft.functions.GraftFunctions.register(s)
     val dirKey = graft.BuildPaths.dirKey(dir)
     val tbl = s"graft_bench_grams_$dirKey"
     if (!(benchGramDirs.contains(dir) && s.catalog.tableExists(tbl))) {

@@ -252,8 +252,7 @@ object SketchStore {
     * ONE code path, so a stream-maintained delta and the stored base
     * artifact cannot drift (VERDICT r17 #3). Expects (doc_id, lang,
     * text); rows with fewer than 3 tokens (null signature) are dropped. */
-  private[graft] def bandRowsOf(s: SparkSession, df: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
+  private[graft] def bandRowsOf(df: DataFrame): DataFrame = {
     df.select(col("doc_id"), col("lang"), expr("graft_minhash_sig(text)").as("sig"))
       .filter(col("sig").isNotNull) // null = fewer than 3 tokens
       .select(col("doc_id"), col("lang"),
@@ -267,7 +266,7 @@ object SketchStore {
     * This IS the standing band index q110 probes per crawl batch. */
   def bands(s: SparkSession, dir: String): DataFrame = {
     val tbl = ensureTable(s, dir, "bands", Seq("band", "key")) {
-      bandRowsOf(s, Tables.load(s, dir, "documents"))
+      bandRowsOf(Tables.load(s, dir, "documents"))
     }
     s.table(tbl)
   }
@@ -382,12 +381,12 @@ object SketchStore {
           deleteRecursively(new java.io.File(artifactRoot(dir, tbl)))
           val docs = Tables.load(s, dir, "documents")
           ensureTable(s, dir, "bandsc", Seq("band", "key")) {
-            bandRowsOf(s, docs.filter(col("doc_id") % 13 =!= 7))
+            bandRowsOf(docs.filter(col("doc_id") % 13 =!= 7))
           }
           val deltaTbl = resetBandsDelta(s, dir)
           // two appends = two simulated micro-batches of the cohort
-          appendBandsDelta(bandRowsOf(s, docs.filter(col("doc_id") % 26 === 7)), deltaTbl)
-          appendBandsDelta(bandRowsOf(s, docs.filter(col("doc_id") % 26 === 20)), deltaTbl)
+          appendBandsDelta(bandRowsOf(docs.filter(col("doc_id") % 26 === 7)), deltaTbl)
+          appendBandsDelta(bandRowsOf(docs.filter(col("doc_id") % 26 === 20)), deltaTbl)
           def pairCount(b: DataFrame): Long = {
             val x = b.select(col("doc_id"), col("band"), col("key"))
             x.as("a").join(x.as("b"),
@@ -758,7 +757,6 @@ object SketchStore {
   /** SimHash pigeonhole chunks `(doc_id, sh, ck, cv)` — q44's 4x8-bit
     * chunking of the 32-bit signature, bucketed on the chunk key. */
   def simChunks(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val tbl = ensureTable(s, dir, "simchunks", Seq("ck", "cv")) {
       Tables.load(s, dir, "documents")
         .select(col("doc_id"), expr("graft_simhash32(text)").as("sh"))
@@ -773,7 +771,6 @@ object SketchStore {
   /** Distinct 60-bit word-3-gram hashes `(doc_id, g)`, bucketed on the
     * gram — q45's inverted-index base and q189's exact-Jaccard truth. */
   def shingles(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val tbl = ensureTable(s, dir, "shingles", Seq("g")) {
       Tables.load(s, dir, "documents")
         .select(col("doc_id"), explode(expr("graft_shingle_hashes(text)")).as("g"))
@@ -785,7 +782,6 @@ object SketchStore {
   /** Sign-LSH bucket rows `(vec_id, label, t, bk)` — the q46 grid (4
     * tables x 8 planes), bucketed on the (table, bucket) join key. */
   def lshBuckets(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val tbl = ensureTable(s, dir, "lshbkt", Seq("t", "bk")) {
       Tables.load(s, dir, "embeddings")
         .select(col("vec_id"), col("label"),
@@ -798,7 +794,6 @@ object SketchStore {
     * K=8 — the q93/q100 two-round Lloyd assignment, bucketed on the
     * cell id (the key every within-cell pair join uses). */
   def kMembers(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val tbl = ensureTable(s, dir, "kmembers", Seq("cluster_id")) {
       val ev = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"),

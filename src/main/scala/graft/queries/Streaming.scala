@@ -867,7 +867,6 @@ object Streaming {
       """SELECT doc_id, CAST(n_bands AS BIGINT) AS n_bands
         |FROM (VALUES (1, 6), (2, 6), (3, 6), (4, 6)) AS t(doc_id, n_bands)
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val url = s"memory://q111-${UUID.randomUUID()}"
       // Round 18 (VERDICT r17 #3): the maintained index is a SketchStore
       // band DELTA — the same schema, bucketing and root as the stored
@@ -887,8 +886,7 @@ object Streaming {
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                          _: Long) =>
           SketchStore.appendBandsDelta(
-            SketchStore.bandRowsOf(batch.sparkSession,
-              batch.withColumn("lang", lit("und"))), idxTbl)
+            SketchStore.bandRowsOf(batch.withColumn("lang", lit("und"))), idxTbl)
         }
         .start()
       try {
@@ -928,7 +926,6 @@ object Streaming {
         |FROM (VALUES (1, false), (2, false), (3, true), (4, false))
         |  AS t(doc_id, is_dup)
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val url = s"memory://q154-${UUID.randomUUID()}"
       val triageDir = java.nio.file.Files.createTempDirectory("graft-ingest-triage").toString
       val conn = NatsTransport.connect(url)
@@ -955,7 +952,7 @@ object Streaming {
         (2L, "und", "the quick brown fox"),
         (3L, "und", "alpha beta gamma delta"),
         (4L, "und", "slow green turtle pace"))).toDF("doc_id", "lang", "text")
-      val toyHits = SketchStore.bandRowsOf(s, toyDocs)
+      val toyHits = SketchStore.bandRowsOf(toyDocs)
         .join(SketchStore.bands(s, dir), Seq("band", "key"), "left_semi").count()
       require(toyHits == 0L,
         s"q154 fixture guard: $toyHits toy band keys collide with the base " +
@@ -967,7 +964,7 @@ object Streaming {
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                          _: Long) =>
           val sess = batch.sparkSession
-          val b = SketchStore.bandRowsOf(sess, batch.withColumn("lang", lit("und")))
+          val b = SketchStore.bandRowsOf(batch.withColumn("lang", lit("und")))
             .persist()
           try {
             // triage: any shared (band, key) with the standing index —
@@ -1238,7 +1235,7 @@ object Streaming {
           try {
             val words = b
               .select(col("doc_id"), col("lang"),
-                explode(PipelineTokenizer.bpeWordsCol(sess)).as("w"))
+                explode(PipelineTokenizer.bpeWordsCol).as("w"))
               .filter(length(col("w")) > 0)
             val known = sess.table(vTbl)
               .select(col("w"), size(col("toks")).as("n_tok"))
@@ -1269,7 +1266,7 @@ object Streaming {
         // expected = docs contributing at least one word (null/empty-text
         // rows never emit a per-doc count row and must not be waited for)
         val nDocs = pub
-          .select(col("doc_id"), explode(PipelineTokenizer.bpeWordsCol(s)).as("w"))
+          .select(col("doc_id"), explode(PipelineTokenizer.bpeWordsCol).as("w"))
           .filter(length(col("w")) > 0)
           .select(col("doc_id")).distinct().count()
         pub.write.format("nats").mode("append")
@@ -1550,13 +1547,9 @@ object Streaming {
         StructField("doc_id", IntegerType, nullable = false),
         StructField("source", StringType, nullable = false),
         StructField("text", StringType, nullable = false)))
-      // The session is a PARAMETER: foreachBatch plans resolve against
-      // the micro-batch's own (cloned) session, where graft_nfc must be
-      // registered separately from the outer one.
-      def bucketsOf(sess: org.apache.spark.sql.SparkSession,
-          df: DataFrame, cn: String): DataFrame = df
+      def bucketsOf(df: DataFrame, cn: String): DataFrame = df
         .select(col("source"),
-          explode(Pipeline.wordFeatColOn(sess, col("text"))).as("w"))
+          explode(Pipeline.wordFeatColOn(col("text"))).as("w"))
         .filter(length(col("w")) > 0)
         .select(col("source"),
           pmod(conv(substring(md5(col("w")), 1, 15), 16, 10)
@@ -1571,7 +1564,7 @@ object Streaming {
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                          _: Long) =>
-          bucketsOf(batch.sparkSession, batch.toDF(), "c")
+          bucketsOf(batch.toDF(), "c")
             .write.mode("append").parquet(deltaDir)
         }
         .start()
@@ -1583,7 +1576,7 @@ object Streaming {
         NatsDemo.awaitSubscriber(url, "docs_drift")
         // expected token total, known before publish — the drain target
         val expTokens = pub
-          .select(explode(Pipeline.wordFeatColOn(s, col("text"))).as("w"))
+          .select(explode(Pipeline.wordFeatColOn(col("text"))).as("w"))
           .filter(length(col("w")) > 0).count()
         pub.write.format("nats").mode("append")
           .option("url", url).option("subject", "docs_drift")
@@ -1611,7 +1604,7 @@ object Streaming {
         .agg(sum(col("c")).cast(org.apache.spark.sql.types.LongType).as("cin"))
       val tin = cin.groupBy(col("source"))
         .agg(sum(col("cin")).cast(org.apache.spark.sql.types.LongType).as("tin"))
-      val ref = bucketsOf(s,
+      val ref = bucketsOf(
         graft.Tables.load(s, dir, "documents")
           .filter(col("text").isNotNull && col("doc_id") % 20 === 0)
           .select(col("source"), col("text")), "c0")
@@ -1737,7 +1730,6 @@ object Streaming {
     // vocab probe join, one bucketed append); the corpus is never
     // rescanned; the final rollup reads the tiny append-only logs. ----
     QueryDef.noBench("q240_curation_at_ingest", curationIngestOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val (_, vTbl) = PipelineTokenizer.ensureBpeModel(s, dir)
       val gramTbl = Pipeline.ensureBenchGramTable(s, dir)
       val idxTbl = SketchStore.resetBandsDelta(s, dir)
@@ -1758,7 +1750,6 @@ object Streaming {
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                          _: Long) =>
           val sess = batch.sparkSession
-          graft.functions.GraftFunctions.register(sess)
           // stage 1: redact — raw PII never lands in any log
           val red = batch
             .select(col("doc_id"), col("lang"),
@@ -1817,8 +1808,7 @@ object Streaming {
               // stage 6: band-index the decontaminated docs into the
               // SketchStore delta (the q111/q154 standing structure)
               SketchStore.appendBandsDelta(
-                SketchStore.bandRowsOf(sess,
-                  clean.select(col("doc_id"), col("lang"), col("t").as("text"))),
+                SketchStore.bandRowsOf(clean.select(col("doc_id"), col("lang"), col("t").as("text"))),
                 idxTbl)
             } finally clean.unpersist()
           } finally red.unpersist()

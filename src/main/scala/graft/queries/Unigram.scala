@@ -278,7 +278,7 @@ object Unigram {
       val (_, uV) = ensureUnigramModel(s, dir)
       val words = T(s, dir, "documents")
         .select(col("doc_id"), col("lang"),
-          explode(PipelineTokenizer.bpeWordsCol(s)).as("w"))
+          explode(PipelineTokenizer.bpeWordsCol).as("w"))
         .filter(length(col("w")) > 0)
       val bpe = s.table(bV).select(col("w"), size(col("toks")).as("nb"))
       val uni = s.table(uV).select(col("w"), col("n_tok").as("nu"))

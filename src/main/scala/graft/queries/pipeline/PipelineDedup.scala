@@ -160,7 +160,6 @@ object PipelineDedup {
     // search; bucket equi-join keeps candidates ~ N^2/2^bits per table,
     // never all-pairs. ----
     QueryDef("q54_embedding_near_dup", embeddingNearDupOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val emb = T(s, dir, "embeddings")
       // Stored LSH bucket frame (round 17, see q41): both self-join
       // sides read the bucketed artifact in place.
@@ -187,7 +186,6 @@ object PipelineDedup {
     // (partition, user), never the items. Band join then surfaces
     // users with similar behavior; never all-pairs. ----
     QueryDef("q59_user_minhash", userMinhashOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val items = T(s, dir, "events")
         .select(col("user_id"),
           (conv(substring(md5(concat(col("event_type"), lit("_"),
@@ -313,7 +311,6 @@ object PipelineDedup {
     // doc-keyed; the three 1-row totals ride audited broadcasts;
     // output = 3 rows. ----
     QueryDef("q172_lsh_band_sweep", lshBandSweepOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val sig = T(s, dir, "documents")
         .select(col("doc_id"), expr("graft_minhash_sig(text)").as("sig"))
         .filter(col("sig").isNotNull)
@@ -377,7 +374,6 @@ object PipelineDedup {
     // coverage distinct and reassembly are doc-keyed; nothing is ever
     // all-pairs. ----
     QueryDef("q180_substring_dedup", substringDedupOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       // (Round 22 note: a Tables.loadSpread here was A/B-measured
       // NEGATIVE (1.71 -> 1.85 s at sf0.1) and reverted — the spread's
       // full-text shuffle costs more than the serial cache fill it
@@ -449,7 +445,6 @@ object PipelineDedup {
     // persisted gram sets / embeddings; the two 1-row pool totals
     // ride audited broadcasts. ----
     QueryDef("q189_dedup_method_sweep", dedupMethodSweepOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       // Round 17 (VERDICT r16 #1): the sweep is now the INCREMENTAL
       // consumer of the standing dedup index — it reads the write-once
       // SketchStore PAIR artifacts (each materialized once from the

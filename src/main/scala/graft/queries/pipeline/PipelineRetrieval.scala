@@ -166,7 +166,6 @@ object PipelineRetrieval {
     // exact cosine top-10 among same-bucket candidates only. The scale
     // path for q42's brute-force baseline: candidates ~ N/2^8 per table. ----
     QueryDef("q46_ann_lsh", annLshOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val emb = T(s, dir, "embeddings")
       // Scan-local bucket keys (graft_lsh_buckets) — now read from the
       // stored bucket artifact (round 17, see q41): the same grid
@@ -201,7 +200,6 @@ object PipelineRetrieval {
     // The bench delta between q42 and q53 measures what the fused
     // expression saves over the higher-order-function fold. ----
     QueryDef("q53_topk_cosine_native", cosineTopkOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val e = T(s, dir, "embeddings")
       val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
       e.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))
@@ -221,7 +219,6 @@ object PipelineRetrieval {
     // argmax ranks on round(cos, 6) with centroid id as tie-break, and
     // the native cosine is bit-identical to the oracle's fold. ----
     QueryDef("q55_ivf_ann", ivfAnnOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val emb = T(s, dir, "embeddings")
       val cent = emb.filter(col("vec_id").between(1, NCELLS))
         .select(col("vec_id").as("c"), col("embedding").as("ce"))
@@ -337,7 +334,6 @@ object PipelineRetrieval {
     // anchor. The kNN-join at 100 TB: bucket join + capped window, both
     // keyed shuffles on compact ids. ----
     QueryDef("q107_hard_negatives", hardNegativesOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val emb = T(s, dir, "embeddings")
       // Stored LSH bucket frame with labels (round 17, see q41): both
       // self-join sides read the bucketed artifact in place.
@@ -373,7 +369,6 @@ object PipelineRetrieval {
     // scoring kernel verbatim (bm25MicroPerDoc — the q93/q100 no-drift
     // rule); the dense leg is q53's native cosine Expression. ----
     QueryDef("q132_rrf_hybrid", rrfHybridOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val wS = Window.orderBy(col("bm25_micro").desc, col("doc_id"))
       val sparse = bm25MicroPerDoc(s, dir)
         .orderBy(col("bm25_micro").desc, col("doc_id")).limit(RRF_LEG_K)
@@ -572,7 +567,6 @@ object PipelineRetrieval {
     // is n×32 scan-local folds + per-query top-K heaps; the graph side
     // is a broadcast-semi-join lookup; output 1 row. ----
     QueryDef("q243_graph_recall_sampled", graphRecallOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val vecs = vecsWithNorms(s, dir)
       val hq = h60col("gr:")
       val qs = vecs.withColumn("hq", hq)
@@ -681,7 +675,6 @@ object PipelineRetrieval {
     // broadcast-codebook scan each; the ADC join ships (vec_id, code)
     // pairs for probed cells only; top-k is a TakeOrdered. ----
     QueryDef("q249_ivfpq_ann", ivfpqOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val emb = T(s, dir, "embeddings")
       // coarse routing — q55's cells, verbatim
       val cent = emb.filter(col("vec_id").between(1, NCELLS))
@@ -941,7 +934,6 @@ object PipelineRetrieval {
     // LUTs kilobytes, candidates = probed-cell slices of the bucketed
     // artifact, truth is the eval harness (n x 32 scan), output 1 row. ----
     QueryDef("q256_ivfpq_panel_eval", ivfpqPanelOracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val pqM = Analytics.PQ_M; val pqSub = Analytics.PQ_SUB; val pqK = Analytics.PQ_K
       val codes = SketchStore.ivfpqCodes(s, dir)
       val emb = T(s, dir, "embeddings")
@@ -1268,7 +1260,6 @@ object PipelineRetrieval {
     * q42/q53 shared-oracle pin), so cos_r is bit-identical and every
     * oracle pairing and stored-artifact content is unchanged. */
   private def scorePairs(vecs: DataFrame)(cand: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(vecs.sparkSession)
     // Round 22 (guide §4.1): graft_dot / (nu * nw) with the frame's
     // precomputed norms — cosine_similarity recomputed Σx² and Σy² per
     // pair (2 of its 3 multiply-adds per element are redundant when
@@ -1308,7 +1299,6 @@ object PipelineRetrieval {
     * integer micros. */
   private[queries] def graphMaintainStats(
       s: SparkSession, dir: String, newEdges: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val vecs = vecsWithNorms(s, dir)
     val isNew = (c: Column) => c % NNDESC_NEW_MOD === NNDESC_NEW_REM
     val (qs, truth) = maintainPanelTruth(s, dir)
@@ -1343,7 +1333,6 @@ object PipelineRetrieval {
     * scorePairs). */
   private[queries] def maintainPanelTruth(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(s)
     val vecs = vecsWithNorms(s, dir)
     val isNew = (c: Column) => c % NNDESC_NEW_MOD === NNDESC_NEW_REM
     val hq = h60col("gr:")
@@ -1450,7 +1439,6 @@ object PipelineRetrieval {
       vecs: DataFrame, queries: DataFrame, entries: DataFrame,
       graph: DataFrame, beams: Seq[Int],
       roundsWanted: Seq[Int]): Map[(Int, Int), DataFrame] = {
-    graft.functions.GraftFunctions.register(vecs.sparkSession)
     val nb = beams.size
     val walkQs = queries
       .withColumn("bi", explode(array(beams.indices.map(lit(_)): _*)))
@@ -1517,7 +1505,6 @@ object PipelineRetrieval {
     * the servable candidate frame — the corpus-linear EVAL half, never
     * the serve path. */
   private def serveTruth(vecs: DataFrame, queries: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(vecs.sparkSession)
     val wTop = Window.partitionBy(col("qid")).orderBy(col("cos_r").desc, col("vec_id"))
     // graft_dot with the precomputed norms (round 22) — bit-identical
     // to the cosine kernel, 1/3 of its per-element multiply-adds (see
@@ -1814,7 +1801,6 @@ object PipelineRetrieval {
     * RESIDUALS — each seed's subvectors relative to its own assigned
     * cell's centroid. PQ_M x PQ_K rows, kilobytes at any corpus size. */
   private[queries] def ivfpqResidualCodebook(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val emb = T(s, dir, "embeddings")
     val cent = emb.filter(col("vec_id").between(1, NCELLS))
       .select(col("vec_id").as("c"), col("embedding").as("ce"))
@@ -1832,7 +1818,6 @@ object PipelineRetrieval {
     * at-ingest twin is cheap: encoding needs NO standing-index probe. */
   private[graft] def ivfpqEncode(
       s: SparkSession, dir: String, vs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val cent = T(s, dir, "embeddings")
       .filter(col("vec_id").between(1, NCELLS))
       .select(col("vec_id").as("c"), col("embedding").as("ce"))
@@ -1865,7 +1850,6 @@ object PipelineRetrieval {
     * candidate slice and the top-K picks (vec_id). */
   private[queries] def ivfpqServeLegs(
       s: SparkSession, dir: String, codes: DataFrame): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(s)
     val pqM = Analytics.PQ_M; val pqSub = Analytics.PQ_SUB
     val emb = T(s, dir, "embeddings")
     val cent = emb.filter(col("vec_id").between(1, NCELLS))

@@ -128,7 +128,7 @@ object PipelineTokenizer {
     QueryDef("q162_bpe_fertility", bpeFertilityOracle) { (s, dir) =>
       val perDoc = bpeDocTokens(s, dir)
       T(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), length(bpeTextCol(s)).as("nch"))
+        .select(col("doc_id"), col("lang"), length(bpeTextCol).as("nch"))
         .join(perDoc, Seq("doc_id"), "left")
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"),
@@ -202,7 +202,7 @@ object PipelineTokenizer {
       val known = s.table(vTbl)
         .select(col("w"), size(col("toks")).as("n_tok"), lit(0L).as("oov"))
       val words = T(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), explode(bpeWordsCol(s)).as("w"))
+        .select(col("doc_id"), col("lang"), explode(bpeWordsCol).as("w"))
         .filter(length(col("w")) > 0)
       val oov = words.select(col("w")).distinct()
         .join(known.select(col("w")), Seq("w"), "left_anti")
@@ -314,7 +314,7 @@ object PipelineTokenizer {
           size(expr(bpeApplySql)).as("nt_pruned"),
           size(col("ms")).as("n_kept"))
       val words = T(s, dir, "documents")
-        .select(col("lang"), explode(bpeWordsCol(s)).as("w"))
+        .select(col("lang"), explode(bpeWordsCol).as("w"))
         .filter(length(col("w")) > 0)
       words.join(pruned, Seq("w"))
         .groupBy(col("lang"))
@@ -352,7 +352,7 @@ object PipelineTokenizer {
       // One-aggregate id dictionary (round 22) — see bpeTokenIds.
       val ids = bpeTokenIds(s, vTbl)
       val lens = Tables.loadSpread(s, dir, "documents")
-        .select(col("doc_id"), size(bpeWordsCol(s)).as("nw"))
+        .select(col("doc_id"), size(bpeWordsCol).as("nw"))
       bpeCorpusWords(s, dir)
         .join(s.table(vTbl).select(col("w"), col("toks")), Seq("w"))
         .select(col("doc_id"), col("wp"), posexplode(col("toks")))
@@ -554,17 +554,14 @@ object PipelineTokenizer {
        |      ELSE lower(text) END""".stripMargin
 
   /** NFC-normalized derived corpus text (Spark side). */
-  private[graft] def bpeTextCol(s: SparkSession): Column = {
-    graft.functions.GraftFunctions.register(s)
-    expr(s"graft_nfc($bpeCaseSql)")
-  }
+  private[graft] def bpeTextCol: Column = expr(s"graft_nfc($bpeCaseSql)")
 
   /** Unicode-word pre-tokenization: letters-or-digits runs of ANY
     * script ([^\p{L}\p{N}]+ split — Java and RE2 agree on the property
     * classes), after NFC. Non-Latin text tokenizes for real now instead
     * of contributing zero tokens (the r14 a-z0-9-only gap). */
-  private[graft] def bpeWordsCol(s: SparkSession): Column =
-    split(bpeTextCol(s), "[^\\p{L}\\p{N}]+")
+  private[graft] def bpeWordsCol: Column =
+    split(bpeTextCol, "[^\\p{L}\\p{N}]+")
 
   /** Corpus -> corpus-weighted word histogram (the one corpus-sized step
     * of the BPE family; everything downstream is vocab-sized). */
@@ -572,7 +569,7 @@ object PipelineTokenizer {
       s: SparkSession, dir: String, docFilter: Column = lit(true)): DataFrame =
     T(s, dir, "documents")
       .filter(docFilter)
-      .select(explode(bpeWordsCol(s)).as("w"))
+      .select(explode(bpeWordsCol).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
 
@@ -580,7 +577,7 @@ object PipelineTokenizer {
     * every consumer re-joins to the stored vocab. */
   private[graft] def bpeCorpusWords(s: SparkSession, dir: String): DataFrame =
     T(s, dir, "documents")
-      .select(col("source"), col("doc_id"), posexplode(bpeWordsCol(s)))
+      .select(col("source"), col("doc_id"), posexplode(bpeWordsCol))
       .toDF("source", "doc_id", "wp", "w")
       .filter(length(col("w")) > 0)
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,13 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class FixtureSchemaSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .appName("fixture-schema-spec")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  private lazy val spark = GraftSession.local(2)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -5,7 +5,7 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,13 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .appName("tables-spec")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  private lazy val spark = GraftSession.local(2)
 
   override def afterAll(): Unit = spark.stop()
 

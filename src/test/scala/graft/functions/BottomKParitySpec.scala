@@ -1,10 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSession
 
 /** Parity gate for the KMV bottom-k-distinct aggregate (round 14): its
   * whole claim is "identical result set to distinct() -> row_number<=k,
@@ -17,17 +19,7 @@ class BottomKParitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("bottomk-parity")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    GraftFunctions.register(s)
-    s
-  }
+  private lazy val spark = GraftSession.local(4)
 
   override def afterAll(): Unit = spark.stop()
 

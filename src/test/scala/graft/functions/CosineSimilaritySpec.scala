@@ -1,18 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSession
+
 class CosineSimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("cosine-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .getOrCreate()
+  private lazy val spark = GraftSession.local(4)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -22,7 +19,6 @@ class CosineSimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("matches the zip_with/aggregate fold bit-for-bit on random vectors") {
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(42)
     val rows = Seq.fill(200)((Seq.fill(64)(rnd.nextFloat() - 0.5f), Seq.fill(64)(rnd.nextFloat() - 0.5f)))
     val df = makeDf(rows)
@@ -46,7 +42,6 @@ class CosineSimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
     // sqrt(left-to-right Σx²) folds, dot/(nu*nw) reproduces the cosine
     // kernel bit-for-bit — same accumulation order, same division
     // operand order.
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     val rows = Seq.fill(200)((Seq.fill(64)(rnd.nextFloat() - 0.5f), Seq.fill(64)(rnd.nextFloat() - 0.5f)))
     val dbl = (c: org.apache.spark.sql.Column) => transform(c, x => x.cast(DoubleType))
@@ -85,7 +80,6 @@ class CosineSimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
     val lit1 = Literal(ArrayData.toArrayData(a), ArrayType(FloatType))
     val lit2 = Literal(ArrayData.toArrayData(b), ArrayType(FloatType))
     val interpreted = CosineSimilarity(lit1, lit2).eval(null).asInstanceOf[Double]
-    GraftFunctions.register(spark)
     val viaDf = makeDf(Seq((a.toSeq, b.toSeq)))
       .select(expr("cosine_similarity(a, b)")).collect()(0).getDouble(0)
     assert(java.lang.Double.doubleToLongBits(interpreted) ===
@@ -97,14 +91,12 @@ class CosineSimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("empty and mismatched arrays yield NaN, not an error") {
-    GraftFunctions.register(spark)
     val df = makeDf(Seq((Seq.empty[Float], Seq.empty[Float]), (Seq(1f, 2f), Seq(1f))))
     val got = df.select(expr("cosine_similarity(a, b)")).collect().map(_.getDouble(0))
     assert(got.forall(_.isNaN))
   }
 
   test("null elements null-propagate exactly like the zip_with/aggregate fold form") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     // array<float> with containsNull=true: one clean row, one with a null element
     val df = Seq(
@@ -136,7 +128,6 @@ class CosineSimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("identical vectors give cosine 1.0") {
-    GraftFunctions.register(spark)
     val v = Seq(0.3f, -0.7f, 0.2f, 0.9f)
     val got = makeDf(Seq((v, v))).select(expr("cosine_similarity(a, b)"))
       .collect()(0).getDouble(0)

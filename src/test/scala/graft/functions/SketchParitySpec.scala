@@ -1,10 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSession
 
 /** Parity gate for the native sketch kernels: each must match, per
   * document/vector on real fixture data, the SQL expression forest it
@@ -16,17 +18,7 @@ class SketchParitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("sketch-parity")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    GraftFunctions.register(s)
-    s
-  }
+  private lazy val spark = GraftSession.local(4)
 
   override def afterAll(): Unit = spark.stop()
 

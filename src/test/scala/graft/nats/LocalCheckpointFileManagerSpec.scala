@@ -14,6 +14,8 @@ import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSession
+
 /** The checkpoint file manager graft ships as the default for local
   * checkpoints: how sessions pick it up, its atomic-write contract, that
   * a trigger writing its checkpoint starts no OS process, and that a
@@ -21,12 +23,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class LocalCheckpointFileManagerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .appName("local-checkpoint-fm-spec")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = GraftSession.local(2)
 
   override def afterAll(): Unit = spark.stop()
 

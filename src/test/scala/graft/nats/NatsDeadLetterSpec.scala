@@ -3,10 +3,11 @@ package graft.nats
 import java.util.UUID
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSession
 
 /** Dead-letter subject for malformed payloads (VERDICT r11 item 7 —
   * A10's design note made operational): `option("deadLetterSubject", …)`
@@ -21,12 +22,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class NatsDeadLetterSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("nats-dead-letter-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = GraftSession.local(4)
 
   override def afterAll(): Unit = spark.stop()
 

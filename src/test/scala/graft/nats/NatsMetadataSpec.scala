@@ -2,11 +2,12 @@ package graft.nats
 
 import java.util.UUID
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSession
 
 /** The source's message-envelope columns (`_subject`, `_seq` — the Kafka
   * topic/partition/offset analog; [[NatsMetadata]]). Two surfaces:
@@ -17,12 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class NatsMetadataSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("nats-metadata-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = GraftSession.local(4)
 
   override def afterAll(): Unit = spark.stop()
 

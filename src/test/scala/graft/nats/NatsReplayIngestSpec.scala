@@ -3,13 +3,14 @@ package graft.nats
 import java.io.{ByteArrayOutputStream, ObjectOutputStream}
 import java.util.UUID
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSession
 
 /** The 100 TB ingest contract for replay mode (ADVICE r10 #1): replay
   * `InputPartition`s carry OFFSETS ONLY — `(afterSeq, count)` plus the
@@ -24,12 +25,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class NatsReplayIngestSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("nats-replay-ingest-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = GraftSession.local(4)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -3,12 +3,13 @@ package graft.nats
 import java.nio.file.Files
 import java.util.UUID
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.streaming.StreamingQueryException
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSession
 
 /** Replayable offsets (the JetStream analog): a retaining transport keeps
   * a bounded sequence-numbered window per literal subject, and
@@ -24,12 +25,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class NatsReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("nats-replay-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = GraftSession.local(4)
 
   override def afterAll(): Unit = spark.stop()
 

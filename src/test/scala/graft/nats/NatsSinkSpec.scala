@@ -3,11 +3,12 @@ package graft.nats
 import java.util.UUID
 import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSession
 
 /** The write side: df.write / writeStream format("nats") publishing
   * codec-encoded CSV to a subject — and the full NATS→Spark→NATS
@@ -15,12 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class NatsSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("nats-sink-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = GraftSession.local(4)
 
   override def afterAll(): Unit = spark.stop()
 

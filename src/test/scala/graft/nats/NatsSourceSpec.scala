@@ -3,12 +3,13 @@ package graft.nats
 import java.util.UUID
 import java.util.concurrent.atomic.AtomicBoolean
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSession
 
 /** E2E tests for the NATS DSv2 source — the ScalaTest port of the
   * reference's only executable test (tests/integration_test.rs:14-73:
@@ -18,12 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class NatsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("nats-source-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = GraftSession.local(4)
 
   override def afterAll(): Unit = spark.stop()
 

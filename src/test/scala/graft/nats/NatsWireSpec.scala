@@ -6,11 +6,12 @@ import java.nio.charset.StandardCharsets.US_ASCII
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSession
 
 /** End-to-end exercise of the native NATS wire protocol over REAL TCP
   * sockets: [[TcpNatsClient]] against [[MiniNatsServer]] — handshake,
@@ -26,12 +27,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class NatsWireSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("nats-wire-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = GraftSession.local(4)
 
   override def afterAll(): Unit = spark.stop()
 

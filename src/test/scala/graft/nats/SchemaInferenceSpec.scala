@@ -2,10 +2,11 @@ package graft.nats
 
 import java.util.UUID
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSession
 
 /** Payload-driven schema inference (`option("inferSchema", "true")`) —
   * the feature the reference advertises (README.md:9) but left TODO
@@ -17,12 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SchemaInferenceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("schema-inference-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = GraftSession.local(4)
 
   override def afterAll(): Unit = spark.stop()
 

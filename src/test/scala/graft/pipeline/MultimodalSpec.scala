@@ -1,8 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSession
 
 /** The multimodal plumbing is real even though the decoder is a stub:
   * these tests pin the executor-side batch shape (iterator-to-iterator,
@@ -10,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("multimodal-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .getOrCreate()
+  private lazy val spark = GraftSession.local(4)
 
   override def afterAll(): Unit = spark.stop()
 

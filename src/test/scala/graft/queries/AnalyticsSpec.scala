@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSession
 
 /** Semantic invariants of the round-5 analytics/governance operators —
   * properties the hash-compare oracle cannot express (determinism across
@@ -13,13 +14,7 @@ class AnalyticsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sfDir = "/root/testdata/sf0.01"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("analytics-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  private lazy val spark = GraftSession.local(4)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -113,7 +108,6 @@ class AnalyticsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Closure over the edge set: both endpoints of every candidate pair
     // landed in the same cluster (this is exactly what one more
     // propagation round would otherwise change — fixpoint check).
-    graft.functions.GraftFunctions.register(spark)
     val sig = graft.Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), expr("graft_minhash_sig(text)").as("sig"))
       .filter(col("sig").isNotNull)
@@ -145,7 +139,6 @@ class AnalyticsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("q78: dropped batch docs are exactly those with an exact-hash or q41-band link into the corpus") {
-    graft.functions.GraftFunctions.register(spark)
     val docs = graft.Tables.load(spark, sfDir, "documents")
     val isNew = col("source").isin("src0", "src1")
     val batchIds = docs.filter(isNew).select("doc_id")
@@ -198,7 +191,6 @@ class AnalyticsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("q79: bloom pre-filter is lossless — output equals the exact (no-bloom) contamination counts") {
-    graft.functions.GraftFunctions.register(spark)
     val bloom = run("q79_bloom_decontaminate").collect().map(_.toString).toSeq
     val sh = graft.Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), explode(expr("graft_shingle_hashes(text)")).as("h"))

@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSession
 
 /** Exactness gate for the BPE family (q150 train / q151 apply), oracle-
   * paired in the driver gate since r14 via the generated chained-CTE
@@ -19,17 +20,7 @@ class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("bpe-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private lazy val spark = GraftSession.local(4)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -258,7 +249,7 @@ class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
       (6L, nfcCafe))
       .toDF("doc_id", "text")
     val feats = rows
-      .select(col("doc_id"), explode(Pipeline.wordFeatCol(spark)).as("w"))
+      .select(col("doc_id"), explode(Pipeline.wordFeatCol).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n"), collect_list(col("w")).as("ws"))

@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSession
 
 /** Property pins for the round-15 curation/objective operators, beyond
   * the DuckDB gate: an INDEPENDENT in-memory reimplementation for the
@@ -18,14 +19,7 @@ class CurationSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("curation-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession.local(4)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -2,10 +2,11 @@ package graft.queries
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSession
 
 /** SURVEY §2.B scans row: the reference's session can register CSV / JSON /
   * memory tables alongside the NATS table (DataFusion built-ins); Spark's
@@ -18,12 +19,7 @@ class MultiFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("multi-format-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = GraftSession.local(4)
 
   override def afterAll(): Unit = spark.stop()
 

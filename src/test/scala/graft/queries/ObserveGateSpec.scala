@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSession
 
 /** q168's Observation contract: the in-flight audit counters (collected
   * by the CollectMetrics node riding the SAME scan as the gate) must
@@ -17,14 +18,7 @@ class ObserveGateSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sfDir = "/root/testdata/sf0.01"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("observe-gate-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession.local(4)
 
   override def afterAll(): Unit = spark.stop()
 

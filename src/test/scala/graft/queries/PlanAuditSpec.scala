@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSession
 
 /** Scale-regression gate: every registered query's physical plan is
   * audited for the patterns that die at 100 TB. A new query that
@@ -13,13 +14,7 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("plan-audit")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  private lazy val spark = GraftSession.local(4)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -566,6 +561,33 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     } yield s"${f.getName}:${i + 1} ${line.trim}"
     assert(offenders.isEmpty,
       s"driver-thread forks in query code:\n${offenders.mkString("\n")}")
+  }
+
+  /** `path:line text` of every `.scala` line under `root` matching `re`. */
+  private def grepTree(root: String, re: scala.util.matching.Regex): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+    val files =
+      try walk.iterator.asScala.map(_.toFile).filter(_.getName.endsWith(".scala")).toList
+      finally walk.close()
+    for {
+      f <- files
+      (line, i) <- sourceLines(f)
+      if re.findFirstIn(line).isDefined
+    } yield s"${f.getPath}:${i + 1} ${line.trim}"
+  }
+
+  test("one session factory: GraftSession.local is the only SparkSession builder in src/main") {
+    // Every main builds its session in GraftSession, so the correctness
+    // gate, the invariance sweep and the probes run the bench's config.
+    val offenders = grepTree("src/main", "SparkSession\\.builder".r)
+      .filterNot(_.startsWith("src/main/scala/graft/GraftSession.scala:"))
+    assert(offenders.isEmpty, s"session builders outside GraftSession:\n${offenders.mkString("\n")}")
+  }
+
+  test("graft's functions come from the extension provider: nothing registers them by hand") {
+    val offenders = grepTree("src", "GraftFunctions\\.register".r)
+    assert(offenders.isEmpty, s"hand registration of graft functions:\n${offenders.mkString("\n")}")
   }
 
   test("no broadcast() hint wraps a corpus-derived frame (r15 VERDICT #2/#3 class pin)") {

@@ -2,10 +2,12 @@ package graft.queries
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSession
 
 /** Scale-stress regression for the dedup/sketch family (VERDICT r5 item
   * 7): run each operator on the sf0.01 fixtures AND on a synthesized 10x
@@ -32,14 +34,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ScaleStressSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[8]")
-    .appName("scale-stress-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession.local(8)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSession
 
 /** Storage-layout levers that only pay off at cluster scale — asserted on
   * the physical plan, not just the result:
@@ -20,13 +21,7 @@ class StorageLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("storage-layout")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  private lazy val spark = GraftSession.local(4)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -450,7 +445,7 @@ class StorageLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
       (3L, "und", "alpha beta gamma delta"),
       (4L, "und", "slow green turtle pace")))
       .toDF("doc_id", "lang", "text")
-    val expected = SketchStore.bandRowsOf(spark, toyDocs)
+    val expected = SketchStore.bandRowsOf(toyDocs)
       .collect().map(r => (r.getLong(0), r.getInt(2), r.getString(3))).toSet
     val streamed = spark.table(deltaTbl)
       .collect().map(r => (r.getLong(0), r.getInt(2), r.getString(3))).toSet
@@ -513,7 +508,7 @@ class StorageLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the v1 layer path directly (what a resolved scan holds at scale).
     val preSwapReader = spark.read.parquet(s"$root/$layer1")
     SketchStore.refreshTable(spark, sfDir, "bands", Seq("band", "key")) {
-      SketchStore.bandRowsOf(spark, Tables.load(spark, sfDir, "documents"))
+      SketchStore.bandRowsOf(Tables.load(spark, sfDir, "documents"))
     }
     val layer2 = Curation.resolveSnapshot(root)
     assert(layer2 !== layer1, "refresh did not commit a new layer")
@@ -543,7 +538,7 @@ class StorageLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rows0 = spark.table(tbl).count()
     // an identity refresh guarantees >= 2 layers on disk
     SketchStore.refreshTable(spark, sfDir, "bands", Seq("band", "key")) {
-      SketchStore.bandRowsOf(spark, Tables.load(spark, sfDir, "documents"))
+      SketchStore.bandRowsOf(Tables.load(spark, sfDir, "documents"))
     }
     val root = graft.BuildPaths.scratch(
       s"sketch_store/${graft.BuildPaths.dirKey(sfDir)}") + s"/$tbl"
@@ -634,7 +629,7 @@ class StorageLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rows = reader0.count()
     def identityRefresh(): Unit = {
       SketchStore.refreshTable(spark, sfDir, "bands", Seq("band", "key")) {
-        SketchStore.bandRowsOf(spark, Tables.load(spark, sfDir, "documents"))
+        SketchStore.bandRowsOf(Tables.load(spark, sfDir, "documents"))
       }; ()
     }
     identityRefresh()

@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSession
 
 /** Exactness gate for the unigram-LM tokenizer (q175 train / q176
   * apply), the BpeSpec pattern: an independent in-memory implementation
@@ -18,17 +19,7 @@ class UnigramSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("unigram-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private lazy val spark = GraftSession.local(4)
 
   override def afterAll(): Unit = spark.stop()
 
