@@ -58,14 +58,16 @@ object GraftFunctions {
     })
 }
 
-/** Installs [[GraftFunctions.table]] into every SparkSession a builder
-  * creates. It is listed in
+/** Installs [[GraftFunctions.table]] and the [[StableBatchTimestamp]]
+  * optimizer rule into every SparkSession a builder creates. It is listed in
   * `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`,
   * which `SparkSession.Builder.getOrCreate` loads through `ServiceLoader`,
   * so no caller registers anything. `getOrCreate` logs a provider's failure
   * as a warning and goes on; GraftExtensionsSpec resolves every function
   * in a plain session so such a failure cannot go unseen. */
 class GraftExtensions extends SparkSessionExtensionsProvider {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.table.foreach(ext.injectFunction)
+    ext.injectOptimizerRule(_ => StableBatchTimestamp)
+  }
 }

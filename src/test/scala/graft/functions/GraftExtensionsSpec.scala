@@ -6,9 +6,10 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** graft's functions reach every session through the classpath extension
-  * provider alone. The session here is built like perfbench's: a plain
-  * builder, with no `withExtensions` and nothing registered by hand.
+/** graft's functions and its optimizer rule reach every session through
+  * the classpath extension provider alone. The session here is built like
+  * perfbench's: a plain builder, with no `withExtensions` and nothing
+  * registered by hand.
   * `getOrCreate` only logs a failing provider, so a broken provider would
   * drop every function silently; these tests are what catches it.
   */
@@ -97,6 +98,16 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(described("cosine_similarity").contains("cosine similarity of two float vectors"))
     assert(described("graft_dist2").contains("squared L2 distance of two double vectors"))
     assert(described("graft_dot").contains("dot product of two double vectors"))
+  }
+
+  test("the optimizer runs StableBatchTimestamp, and a batch plan keeps its literals") {
+    val qe = spark.sql("SELECT current_timestamp() AS ts, current_date() AS d").queryExecution
+    val optimized = qe.optimizedPlan
+    val rule = qe.tracker.rules.get(StableBatchTimestamp.ruleName)
+    assert(rule.exists(r => r.numInvocations > 0 && r.numEffectiveInvocations == 0), rule)
+    assert(optimized.expressions.flatMap(_.children).map(_.getClass) ===
+      Seq(classOf[Literal], classOf[Literal]), optimized)
+    assert(!optimized.exists(_.expressions.exists(_.exists(_.isInstanceOf[BatchTimestampValue]))))
   }
 
   test("wrong arity fails with a clear error, not an index exception") {
