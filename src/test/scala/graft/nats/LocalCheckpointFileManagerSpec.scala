@@ -3,31 +3,27 @@ package graft.nats
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path => JPath}
 import java.util.UUID
-import java.util.concurrent.CopyOnWriteArrayList
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager}
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.GraftSession
+import graft.{GraftSession, ProcessStarts}
 
-/** The checkpoint file manager graft ships as the default for local
-  * checkpoints: how sessions pick it up, its atomic-write contract, that
-  * a trigger writing its checkpoint starts no OS process, and that a
-  * checkpoint written by Spark's default manager restarts under it.
+/** The file manager of local checkpoints: Spark's default manager over
+  * graft's fork-free local filesystem. Its atomic-write contract, that a
+  * trigger writing its checkpoint starts no OS process, and that a
+  * checkpoint without `.crc` side files restarts exactly once.
   */
 class LocalCheckpointFileManagerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = GraftSession.local(2)
 
   override def afterAll(): Unit = spark.stop()
-
-  private val ConfKey = "spark.sql.streaming.checkpointFileManagerClass"
 
   private val schema = StructType(Seq(
     StructField("id", IntegerType, nullable = false),
@@ -38,8 +34,8 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite with BeforeAndAfterAll 
     try body(dir) finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
 
-  private def manager(dir: JPath, session: SparkSession = spark): CheckpointFileManager =
-    CheckpointFileManager.create(new Path(dir.toUri), session.sessionState.newHadoopConf())
+  private def manager(dir: JPath): CheckpointFileManager =
+    CheckpointFileManager.create(new Path(dir.toUri), spark.sessionState.newHadoopConf())
 
   private def write(fm: CheckpointFileManager, p: Path, text: String, overwrite: Boolean): Unit = {
     val out = fm.createAtomic(p, overwrite)
@@ -52,18 +48,9 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite with BeforeAndAfterAll 
     try new String(in.readAllBytes(), UTF_8) finally in.close()
   }
 
+  /** The directory's file names, without the `.crc` side files the manager writes. */
   private def names(dir: JPath): Set[String] =
-    Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSet
-
-  test("a plain session resolves local checkpoints to graft's manager") {
-    withTempDir(dir => assert(manager(dir).isInstanceOf[LocalCheckpointFileManager]))
-  }
-
-  test("an explicit session setting of the manager key still wins") {
-    val session = spark.newSession()
-    session.conf.set(ConfKey, classOf[FileContextBasedCheckpointFileManager].getName)
-    withTempDir(dir => assert(manager(dir, session).isInstanceOf[FileContextBasedCheckpointFileManager]))
-  }
+    Files.list(dir).iterator().asScala.map(_.getFileName.toString).filterNot(_.endsWith(".crc")).toSet
 
   test("createAtomic without overwrite onto an existing file fails and keeps the old bytes") {
     withTempDir { dir =>
@@ -72,7 +59,8 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite with BeforeAndAfterAll 
       write(fm, p, "old", overwrite = false)
       intercept[FileAlreadyExistsException](write(fm, p, "new", overwrite = false))
       assert(read(fm, p) === "old")
-      assert(names(dir) === Set("0"), "the losing writer's temp file is removed")
+      // Spark's manager leaves the losing writer's hidden temp file, as on HDFS.
+      assert(names(dir).filterNot(_.startsWith(".")) === Set("0"))
     }
   }
 
@@ -103,25 +91,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite with BeforeAndAfterAll 
     }
   }
 
-  test("a file rewritten over a stale .crc from Spark's default manager reads back its new content") {
-    withTempDir { dir =>
-      val conf = spark.sessionState.newHadoopConf()
-      val root = new Path(dir.toUri)
-      val p = new Path(root, "1.delta")
-      write(new FileContextBasedCheckpointFileManager(root, conf), p, "written by the default manager", overwrite = true)
-      assert(names(dir).contains(".1.delta.crc"), "the default manager writes checksums")
-      val fm = new LocalCheckpointFileManager(root, conf)
-      assert(read(fm, p) === "written by the default manager", "checksummed files still read")
-      write(fm, p, "rewritten", overwrite = true)
-      assert(read(fm, p) === "rewritten")
-      assert(fm.list(root).map(_.getPath.getName).toSeq === Seq("1.delta"), ".crc files stay hidden")
-      fm.delete(p)
-      assert(names(dir).isEmpty)
-    }
-  }
-
   test("a trigger that writes its offset WAL and commit log starts no OS process") {
-    import jdk.jfr.consumer.{RecordedEvent, RecordingStream}
     val url = "memory://ckpt-fm-" + UUID.randomUUID()
     val conn = NatsTransport.connect(url)
     withTempDir { ckpt =>
@@ -139,47 +109,31 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite with BeforeAndAfterAll 
         }
         assert(spark.table("ckpt_no_fork").count() === id)
       }
-      val starts = new CopyOnWriteArrayList[RecordedEvent]()
-      val rs = new RecordingStream()
       try {
         NatsDemo.awaitSubscriber(url, "ev")
         deliver(1) // the first trigger also writes the checkpoint's metadata
-        rs.enable("jdk.ProcessStart").withStackTrace()
-        rs.onEvent("jdk.ProcessStart", e => starts.add(e))
-        rs.startAsync()
-        val batchBefore = q.lastProgress.batchId
-        (2 to 4).foreach(deliver)
-        assert(q.lastProgress.batchId - batchBefore >= 3, "at least 3 data triggers ran")
-        // A process started after the triggers proves the recording sees
-        // process starts: once it arrives, every earlier one has too.
-        val sentinel = new ProcessBuilder("true").start()
-        sentinel.waitFor()
-        val deadline = System.currentTimeMillis() + 30000
-        def sawSentinel = starts.asScala.exists(_.getLong("pid") == sentinel.pid())
-        while (!sawSentinel && System.currentTimeMillis() < deadline) Thread.sleep(50)
-        assert(sawSentinel, "the recording never saw the sentinel process start")
-        val forks = starts.asScala.filterNot(_.getLong("pid") == sentinel.pid())
-        assert(forks.size === 0, forks.map { e =>
-          val top = Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala.take(12))
-            .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}")
-          s"${e.getString("command")} <- ${top.mkString(" <- ")}"
-        }.mkString("process starts during the triggers:\n", "\n", ""))
+        val forks = ProcessStarts.during {
+          val batchBefore = q.lastProgress.batchId
+          (2 to 4).foreach(deliver)
+          assert(q.lastProgress.batchId - batchBefore >= 3, "at least 3 data triggers ran")
+        }
+        assert(forks.size === 0,
+          ProcessStarts.describe(forks).mkString("process starts during the triggers:\n", "\n", ""))
       } finally {
-        rs.close()
         q.stop()
         conn.close()
       }
     }
   }
 
-  test("a checkpoint written by Spark's default manager restarts exactly once under graft's manager") {
+  test("a checkpoint without .crc side files restarts with the downtime rows exactly once") {
     val url = s"memory://ckpt-fm-${UUID.randomUUID()}?retain=100"
     val conn = NatsTransport.connect(url)
     withTempDir { base =>
       val ckpt = base.resolve("ckpt").toString
       val out = base.resolve("out").toString
-      def startQuery(session: SparkSession) =
-        session.readStream.format("nats").schema(schema)
+      def startQuery() =
+        spark.readStream.format("nats").schema(schema)
           .option("url", url).option("subject", "ev")
           .option("batchSize", "2").option("flushTimeoutMs", "50")
           .option("replay", "true").option("startSequence", "0")
@@ -197,18 +151,19 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite with BeforeAndAfterAll 
       }
       try {
         (1 to 3).foreach(i => conn.publish("ev", s"$i,row$i".getBytes(UTF_8)))
-        val old = spark.newSession()
-        old.conf.set(ConfKey, classOf[FileContextBasedCheckpointFileManager].getName)
-        val q1 = startQuery(old)
+        val q1 = startQuery()
         drain(q1, 3)
         q1.stop()
         assert(sunkIds() === Seq(1, 2, 3))
-        val crcs = Files.walk(base.resolve("ckpt")).iterator().asScala
-          .count(_.getFileName.toString.endsWith(".crc"))
-        assert(crcs > 0, "the first run's checkpoint was written by the default manager")
+        // A checkpoint and sink log written without checksums, as a plain
+        // java.nio writer leaves them, must restart as well.
+        val crcs = Seq(base.resolve("ckpt"), base.resolve("out").resolve("_spark_metadata"))
+          .flatMap(Files.walk(_).iterator().asScala.filter(_.getFileName.toString.endsWith(".crc")).toSeq)
+        assert(crcs.nonEmpty, "Spark's manager writes checksums")
+        crcs.foreach(Files.delete)
 
         (4 to 7).foreach(i => conn.publish("ev", s"$i,row$i".getBytes(UTF_8)))
-        val q2 = startQuery(spark)
+        val q2 = startQuery()
         drain(q2, 7)
         q2.stop()
         assert(sunkIds() === (1 to 7), "downtime rows arrive exactly once after the restart")
