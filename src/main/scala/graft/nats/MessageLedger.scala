@@ -37,21 +37,21 @@ final case class LedgerConfig(
   }
 }
 
-/** Driver-side, thread-safe, offset-indexed row ledger — the Spark analog
+/** Driver-side, thread-safe, offset-indexed message ledger — the Spark analog
   * of the reference's BatchBuffer + flush policy (src/batch_buffer.rs:41-209)
   * re-shaped for the micro-batch model (Spark's socket-source pattern):
   *
-  *   - the NATS subscriber thread `append`s raw payloads as they arrive;
+  *   - the NATS subscriber thread `append`s messages as they arrive;
   *   - the MicroBatchStream calls `admit` from `latestOffset` — the flush
   *     policy (size OR timeout, src/batch_buffer.rs:73-86) decides whether
   *     a new batch is declared and how many rows it may contain;
-  *   - `rowsBetween(start, end)` snapshots a planned batch's payloads so
+  *   - `rowsBetween(start, end)` snapshots a planned batch's messages so
   *     they can ride to executors inside InputPartitions;
   *   - `trim(committedOffset)` releases memory once Spark commits a batch.
   *
   * Offsets are cumulative accepted-message counts, monotone for the life
-  * of the ledger. Payloads are buffered raw; decoding happens in the
-  * executor-side PartitionReader so parse work scales out with tasks.
+  * of the ledger. Messages are buffered as received; decoding happens in
+  * the executor-side PartitionReader so parse work scales out with tasks.
   *
   * Overflow policy: drop-newest with a counter (`droppedRows`). A streaming
   * source must not block its transport callback, and dropping the newest
@@ -59,17 +59,17 @@ final case class LedgerConfig(
   * the reference's declared-but-dead max_buffer_size intent
   * (src/batch_buffer_test.rs:78-100).
   */
-final class MessageLedger(config: LedgerConfig) {
+final class MessageLedger[A: scala.reflect.ClassTag](config: LedgerConfig) {
   // base = offset of rows.head; rows holds [base, base + rows.size)
   private var base = 0L
-  private val rows = scala.collection.mutable.ArrayDeque.empty[String]
+  private val rows = scala.collection.mutable.ArrayDeque.empty[A]
   private var dropped = 0L
   private var lastAdmitMs = Long.MinValue
 
-  /** Append one raw payload; false (and counted) when the buffer is full. */
-  def append(payload: String): Boolean = synchronized {
+  /** Append one message; false (and counted) when the buffer is full. */
+  def append(message: A): Boolean = synchronized {
     if (rows.size >= config.maxBufferSize) { dropped += 1; false }
-    else { rows.append(payload); true }
+    else { rows.append(message); true }
   }
 
   /** Total rows ever accepted = the offset one past the newest row. */
@@ -94,8 +94,8 @@ final class MessageLedger(config: LedgerConfig) {
     fromOffset + admitted
   }
 
-  /** Snapshot payloads in [start, end) for executor shipment. */
-  def rowsBetween(start: Long, end: Long): Array[String] = synchronized {
+  /** Snapshot messages in [start, end) for executor shipment. */
+  def rowsBetween(start: Long, end: Long): Array[A] = synchronized {
     require(start >= base, s"offset $start already trimmed (base $base)")
     val hi = math.min(end, base + rows.size)
     if (hi <= start) Array.empty

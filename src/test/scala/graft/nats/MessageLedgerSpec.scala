@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class MessageLedgerSpec extends AnyFunSuite {
 
   private def ledger(batch: Int = 3, timeoutMs: Long = 1000, cap: Int = 10) =
-    new MessageLedger(LedgerConfig(batch, timeoutMs, cap))
+    new MessageLedger[String](LedgerConfig(batch, timeoutMs, cap))
 
   test("size-based flush: batch admitted exactly when batchSize rows arrive") {
     val l = ledger(batch = 3)
@@ -74,7 +74,7 @@ class MessageLedgerSpec extends AnyFunSuite {
   }
 
   test("concurrent appends never lose or duplicate accepted rows") {
-    val l = new MessageLedger(LedgerConfig(1000, 1000, 100000))
+    val l = new MessageLedger[String](LedgerConfig(1000, 1000, 100000))
     val threads = (0 until 8).map { t =>
       new Thread(() => (0 until 1000).foreach(i => l.append(s"$t-$i")))
     }

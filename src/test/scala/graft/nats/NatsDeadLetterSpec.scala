@@ -14,9 +14,8 @@ import graft.GraftSession
   * keeps the skip-and-count error policy AND republishes every skipped
   * payload to the named subject, the parse error and source envelope
   * riding as NATS headers (`Graft-Error`, `Graft-Source-Subject`,
-  * `Graft-Source-Seq`) on the payload as the pipeline decoded it (UTF-8
-  * text — the codecs are textual, so a non-UTF-8 payload is already
-  * garbage at decode and its invalid bytes arrive replaced) — the
+  * `Graft-Source-Seq`) on the payload bytes exactly as they were received
+  * (a non-UTF-8 payload arrives with its original bytes) — the
   * NATS-native quarantine queue an operator drains with a plain
   * subscription.
   */

@@ -331,7 +331,7 @@ class NatsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(parts.length === 4, s"4 subjects with numPartitions=4 must fan out 4-wide")
       // each partition holds exactly one subject's rows, in arrival order
       val byName = parts.map { p =>
-        val names = p.payloads.map(_.split(",")(1))
+        val names = p.messages.map(m => new String(m.payload).split(",")(1))
         val families = names.map(_.dropRight(1)).distinct
         assert(families.length === 1, s"partition mixes subjects: ${names.toSeq}")
         assert(names.map(_.last).toSeq === Seq('1', '2', '3'),
