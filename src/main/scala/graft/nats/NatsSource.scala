@@ -704,8 +704,8 @@ private[nats] final class RowPipeline(
 // ---------------------------------------------------------------------------
 // Batch path: the reference's one-shot `SELECT ... FROM nats_table LIMIT n`
 // UX (tests/integration_test.rs:53). The reader subscribes at task start and
-// collects until the row bound is reached or collectTimeoutMs of silence-
-// bounded wall time elapses. Executors connect to the transport directly —
+// collects until the row bound is reached or collectTimeoutMs of wall time
+// elapses. Executors connect to the transport directly —
 // no driver bottleneck on the data path.
 // ---------------------------------------------------------------------------
 
@@ -797,18 +797,19 @@ final class NatsBatchReader(p: NatsBatchPartition) extends PartitionReader[Inter
   // filtered messages still consume an index — it names the message,
   // not the surviving row).
   private val arrivals = new java.util.concurrent.atomic.AtomicLong(0)
+  private val deadline = System.nanoTime() + p.opts.collectTimeoutMs * 1000000L
   private val sub = conn.subscribe(p.opts.subject, None) { (subject, headers, payload) =>
     // Count rows AFTER filtering, so a pushed filter + limit means
     // "first n matching rows" — the semantics DataFusion's limit gives
-    // the reference.
-    if (accepted.get() < p.rowBound) {
+    // the reference. Nothing is accepted past the deadline, so the read
+    // ends there with a fixed set of rows left to drain.
+    if (accepted.get() < p.rowBound && System.nanoTime() < deadline) {
       pipeline.decode(subject, arrivals.incrementAndGet(), headers, payload)
         .foreach { row =>
           if (accepted.incrementAndGet() <= p.rowBound) queue.put(row)
         }
     }
   }
-  private val deadline = System.nanoTime() + p.opts.collectTimeoutMs * 1000000L
   private var current: InternalRow = _
   private var emitted = 0L
 
@@ -817,8 +818,8 @@ final class NatsBatchReader(p: NatsBatchPartition) extends PartitionReader[Inter
     var row: InternalRow = null
     while (row == null && System.nanoTime() < deadline)
       row = queue.poll(20, java.util.concurrent.TimeUnit.MILLISECONDS)
-    // Past the deadline, rows already accepted still drain without
-    // blocking (an unbounded subject never "ends", so nothing else will).
+    // Past the deadline, rows accepted before it still drain without
+    // blocking.
     if (row == null) row = queue.poll()
     row != null && { current = row; emitted += 1; true }
   }
@@ -1019,11 +1020,12 @@ final class NatsMicroBatchStream(
   // each message exactly once (each message reaches exactly one member).
   // A subject equal to the previous message's reuses that instance, so a
   // planned partition serializes each run of one subject once (a racing
-  // queue member at worst stores an equal copy).
+  // queue member at worst stores an equal copy: the field is read once).
   private var lastSubject = ""
   private val onSubjectPayload: (String, Seq[(String, String)], Array[Byte]) => Unit = {
     (subj, headers, payload) =>
-      val s = if (subj == lastSubject) lastSubject else { lastSubject = subj; subj }
+      val last = lastSubject
+      val s = if (subj == last) last else { lastSubject = subj; subj }
       ledger.append(NatsMessage(s, headers, payload))
       ()
   }

@@ -48,6 +48,66 @@ class NatsReadBoundsSpec extends AnyFunSuite {
     } finally { reader.close(); conn.close() }
   }
 
+  test("one-shot reader: rows published after the collect deadline are not returned") {
+    val url = freshBus()
+    val opts = options(url, "after").copy(collectTimeoutMs = 200L)
+    val reader = new NatsBatchReader(
+      NatsBatchPartition(schema, schema, Array.empty, Long.MaxValue, opts))
+    val conn = NatsTransport.connect(url)
+    try {
+      (1 to 3).foreach(i => conn.publish("after", s"$i,r$i".getBytes))
+      Thread.sleep(300)
+      // one more message lands (on this thread) after every row read: a
+      // reader still accepting past its deadline would never run dry
+      var n = 3
+      val ids = Iterator.continually(reader.next()).takeWhile(identity).take(50)
+        .map { _ =>
+          n += 1
+          conn.publish("after", s"$n,r$n".getBytes)
+          reader.get().getInt(0)
+        }.toList
+      assert(ids === List(1, 2, 3))
+    } finally { reader.close(); conn.close() }
+  }
+
+  test("one-shot reader: a subject published faster than it is read ends at the collect deadline") {
+    val url = freshBus()
+    val opts = options(url, "busy").copy(collectTimeoutMs = 200L)
+    val conn = NatsTransport.connect(url)
+    // ~40 rows per millisecond in, at most ~20 per millisecond read out
+    // (50 us per row): a reader that kept accepting past its deadline
+    // would never find its queue empty
+    @volatile var publishing = true
+    val publisher = new Thread(() => {
+      var i = 0
+      while (publishing) {
+        (1 to 40).foreach { _ => i += 1; conn.publish("busy", s"$i,r$i".getBytes) }
+        Thread.sleep(1)
+      }
+    })
+    val reader = new NatsBatchReader(
+      NatsBatchPartition(schema, schema, Array.empty, Long.MaxValue, opts))
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    try {
+      publisher.start()
+      val read = pool.submit(() => {
+        var rows = 0L
+        while (reader.next()) {
+          rows += 1
+          java.util.concurrent.locks.LockSupport.parkNanos(50000L)
+        }
+        rows
+      })
+      val rows = read.get(5, java.util.concurrent.TimeUnit.SECONDS)
+      assert(rows > 0L)
+    } finally {
+      publishing = false
+      publisher.join(5000)
+      pool.shutdownNow()
+      reader.close(); conn.close()
+    }
+  }
+
   test("stopAtRows: a live stream's offset stops at the cap") {
     val url = freshBus()
     val stream = new NatsMicroBatchStream(schema, schema, Array.empty,
